@@ -28,11 +28,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-
-def _events(spark, sf_dir: str):
-    from .queries.events import _domain_events
-
-    return _domain_events(spark, sf_dir)
+from .domain import _domain_events
 
 
 def _write_or_count(df, out: str | None, partition_by: list[str],
@@ -73,7 +69,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
 
     spark = get_spark(f"cli-{args.cmd}")
-    ev = _events(spark, args.sf_dir)
+    ev = _domain_events(spark, args.sf_dir)
 
     if args.cmd == "build-ledger":
         from .ledger.build import build_wallet_ledger

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..domain import FIXED_NOW
 from ..sources.tables import load_table
-from .events import FIXED_NOW
 from .util import dsum, sql_dsum
 
 # --- wallet_event_scans (S9): last 3 events per sampled wallet.

@@ -536,9 +536,9 @@ GROUP BY 1, 2
 
 
 def reconcile_chain_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..domain import _fifo_input
     from ..operators.fifo import avg_cost_positions
     from ..verify.invariants import reconcile_balances
-    from .events import _fifo_input
 
     pos = avg_cost_positions(_fifo_input(spark, sf_dir)).select(
         F.col("key").alias("wallet"),

@@ -13,8 +13,8 @@ method. The serving discipline carried over:
 
 The context takes the *generic* event-stream tables (driver testdata) or
 domain-normalized frames; endpoints are thin — all heavy lifting lives in
-operators/ and ledger/, so a real HTTP front (any WSGI wrapper) is a
-30-line adapter.
+domain.py, operators/ and ledger/, so a real HTTP front (any WSGI wrapper)
+is a 30-line adapter. Nothing here imports the ``queries`` gate registry.
 """
 
 from __future__ import annotations
@@ -24,8 +24,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import domain
 from ..operators.candles import finalize, ohlcv, rebucket
-from ..queries import events as EQ
 
 INTERVALS = {"1m": 60, "5m": 300, "1h": 3600, "1d": 86400, "1w": 604800}
 
@@ -52,11 +52,11 @@ class ServeContext:
     def _snapshots(self) -> DataFrame:
         if self.snapshot_state is None:
             from ..ledger.build import build_wallet_snapshots
-            from ..queries.events import SNAPSHOT_INTERVAL_S, _domain_events
 
             self.snapshot_state = build_wallet_snapshots(
-                _domain_events(self.spark, self.sf_dir, integer_splits=True),
-                interval_s=SNAPSHOT_INTERVAL_S,
+                domain._domain_events(self.spark, self.sf_dir,
+                                      integer_splits=True),
+                interval_s=domain.SNAPSHOT_INTERVAL_S,
             ).localCheckpoint(eager=True)
         return self.snapshot_state
 
@@ -87,17 +87,17 @@ class ServeContext:
 
         limit = max(1, min(limit, 100))
         if category is not None:
-            df = EQ.category_leaderboard(self.spark, self.sf_dir, category)
+            df = domain.category_leaderboard(self.spark, self.sf_dir, category)
             return {"sort": sort, "category": category,
                     "entries": _rows(df, limit)}
         if sort == "volume":
-            df = EQ.top_users_by_volume(self.spark, self.sf_dir)
+            df = domain.top_users_by_volume(self.spark, self.sf_dir)
         elif sort == "pnl":
             # TakeOrdered top-k then rank the ≤100-row frame;
             # monotonically_increasing_id is NOT a rank — it encodes the
             # partition id in the high bits (ADVICE r1)
             df = ranked_topk(
-                EQ.fifo_user_pnl(self.spark, self.sf_dir),
+                domain.fifo_user_pnl(self.spark, self.sf_dir),
                 [F.desc("realized_pnl"), F.asc("key")],
                 limit,
             )
@@ -136,60 +136,9 @@ class ServeContext:
         )
         return {"key": key, "interval": interval, "candles": _rows(out, limit)}
 
-    # /chart (beyond-ref): gap-filled hourly volume series, LTTB-
-    # downsampled to max_points when the range is long — the dashboard
-    # charting path largestTriangleThreeBuckets exists for. Composes the
-    # WITH-FILL spine (events_gap_fill) with the reusable LTTB kernel
-    # (queries/timeseries_q.py::lttb_select); filled hours chart as 0.
-    def chart_series(self, event_type: str, max_points: int = 200) -> dict:
-        from ..queries.timeseries_q import events_gap_fill, lttb_select
-
-        max_points = max(3, min(max_points, 2000))
-        filled = (
-            events_gap_fill(self.spark, self.sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                "event_type",
-                (
-                    F.datediff(
-                        "bucket", F.lit("2024-01-01").cast("date")
-                    ) * 1440
-                    + F.hour("bucket") * 60
-                ).cast("long").alias("x"),
-                F.col("cents").alias("y"),
-            )
-        )
-        pts = (
-            lttb_select(filled, max_points)
-            .orderBy("pos")
-            .select(
-                F.col("pos"),
-                F.expr(
-                    "TIMESTAMP'2024-01-01 00:00:00' + make_interval"
-                    "(0, 0, 0, 0, 0, CAST(x_min AS INT), 0)"
-                ).alias("bucket"),
-                F.col("cents"),
-            )
-            .select(
-                # ISO wall-clock string, NOT epoch seconds: the bucket is
-                # rebuilt from NTZ-derived minute offsets, so epoch
-                # conversion would shift with the driver session's
-                # timezone (CLAUDE.md determinism rule 6); interpret+format
-                # happen in the same session tz and cancel
-                "pos",
-                F.date_format("bucket", "yyyy-MM-dd'T'HH:mm:ss").alias("time"),
-                "cents",
-            )
-        )
-        return {
-            "key": event_type,
-            "maxPoints": max_points,
-            "points": _rows(pts, max_points),
-        }
-
     # /user/stats (src/api.ts:1034-1116)
     def user_stats(self, user_id: int) -> dict:
-        df = EQ.user_stats(self.spark, self.sf_dir).filter(
+        df = domain.user_stats(self.spark, self.sf_dir).filter(
             F.col("user_id") == user_id
         )
         rows = _rows(df, 1)
@@ -247,10 +196,9 @@ class ServeContext:
     # /trades recent window with adaptive widening (T6: retry with a 365d
     # window when the 30d window returns <10 rows, src/api.ts:1188-1192)
     def recent_trades(self, user_id: int, now=None, min_rows: int = 10) -> dict:
-        from ..queries.events import FIXED_NOW
         from ..sources.tables import load_table
 
-        now = F.lit(now or FIXED_NOW).cast("timestamp")
+        now = F.lit(now or domain.FIXED_NOW).cast("timestamp")
         ev = load_table(self.spark, self.sf_dir, "events").filter(
             (F.col("user_id") == user_id) & (F.col("event_type") == "purchase")
         )
@@ -277,12 +225,11 @@ class ServeContext:
         modes 3-4 add the open-lot unrealized mark at the period end."""
         from ..ledger.pnl import _canonical_mode
         from ..operators.fifo import fifo_unrealized_modes
-        from ..queries.events import FIXED_NOW, _fifo_input
 
         mode = _canonical_mode(mode)
         start = start or "1970-01-01 00:00:00"
-        end = end or FIXED_NOW
-        base = _fifo_input(self.spark, self.sf_dir).filter(
+        end = end or domain.FIXED_NOW
+        base = domain._fifo_input(self.spark, self.sf_dir).filter(
             F.col("key") == user_id
         )
         df = fifo_unrealized_modes(base, start, end)
@@ -310,12 +257,11 @@ class ServeContext:
     # /leaderboard/explain (src/api.ts:1560-1667): per-wallet ledger entries
     # + the never-negative-inventory invariant verdict (O7)
     def explain_user(self, user_id: int, limit: int = 10000) -> dict:
-        from ..queries.events import _domain_events
         from ..ledger.build import build_wallet_ledger
         from ..verify.invariants import check_non_negative_inventory
 
         wallet = f"0xw{user_id}"
-        events = _domain_events(self.spark, self.sf_dir).filter(
+        events = domain._domain_events(self.spark, self.sf_dir).filter(
             F.col("wallet") == wallet
         )
         entries = build_wallet_ledger(events)
@@ -344,7 +290,7 @@ class ServeContext:
     # positions per market proxy
     def holders(self, limit: int = 5) -> dict:
         df = (
-            EQ.fifo_user_pnl(self.spark, self.sf_dir)
+            domain.fifo_user_pnl(self.spark, self.sf_dir)
             .filter(F.col("open_qty") > 0)
             .orderBy(F.desc("open_qty"), F.asc("key"))
             .select(
@@ -356,13 +302,12 @@ class ServeContext:
     # /market/stats (src/api.ts:1240-1256 shape): 24h window aggregates +
     # deterministic last price per key
     def market_stats(self, key: str) -> dict:
-        from ..queries.events import FIXED_NOW
         from ..sources.tables import load_table
 
         ev = load_table(self.spark, self.sf_dir, "events").filter(
             F.col("event_type") == key
         )
-        now = F.lit(FIXED_NOW).cast("timestamp")
+        now = F.lit(domain.FIXED_NOW).cast("timestamp")
         day = ev.filter(F.col("ts") >= now - F.expr("INTERVAL 24 HOURS"))
         agg = day.agg(
             F.count(F.lit(1)).alias("trades24h"),
@@ -406,11 +351,11 @@ class ServeContext:
     # /ledger (src/api.ts ledger rows, clamp ≤10000, keyset order)
     def ledger(self, user_id: int, limit: int = 10000) -> dict:
         from ..ledger.build import build_wallet_ledger
-        from ..queries.events import _domain_events
 
         wallet = f"0xw{user_id}"
         entries = build_wallet_ledger(
-            _domain_events(self.spark, self.sf_dir).filter(F.col("wallet") == wallet)
+            domain._domain_events(self.spark, self.sf_dir)
+            .filter(F.col("wallet") == wallet)
         ).orderBy("block_timestamp", "block_number", "log_index")
         rows = _rows(
             entries.select(
@@ -427,11 +372,11 @@ class ServeContext:
     def snapshots(self, user_id: int, interval_s: int = 86400,
                   limit: int = 10000) -> dict:
         from ..ledger.build import build_wallet_snapshots
-        from ..queries.events import _domain_events
 
         wallet = f"0xw{user_id}"
         snaps = build_wallet_snapshots(
-            _domain_events(self.spark, self.sf_dir).filter(F.col("wallet") == wallet),
+            domain._domain_events(self.spark, self.sf_dir)
+            .filter(F.col("wallet") == wallet),
             interval_s=interval_s,
         ).orderBy("snapshot_epoch")
         rows = _rows(
@@ -446,11 +391,11 @@ class ServeContext:
     # /positions (src/api.ts positions from balances + enrichment)
     def positions(self, user_id: int) -> dict:
         from ..ledger.build import build_wallet_ledger
-        from ..queries.events import _domain_events
 
         wallet = f"0xw{user_id}"
         entries = build_wallet_ledger(
-            _domain_events(self.spark, self.sf_dir).filter(F.col("wallet") == wallet)
+            domain._domain_events(self.spark, self.sf_dir)
+            .filter(F.col("wallet") == wallet)
         )
         signed = (
             F.when(F.col("event_type").isin("trade_buy", "transfer_in"),

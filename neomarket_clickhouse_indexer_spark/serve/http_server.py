@@ -129,11 +129,6 @@ def make_handler(ctx: ServeContext):
                     limit=_q(qs, "limit", int, 100),
                     category=_q(qs, "category", str, None),
                 )
-            if path == "/chart":  # beyond-ref, same envelope discipline
-                return ctx.chart_series(
-                    _q(qs, "event_type", str, "purchase"),
-                    max_points=_q(qs, "max_points", int, 200),
-                )
             # path-param routes: /:resource/:wallet (src/api.ts:2027-2034)
             parts = [p for p in path.split("/") if p]
             if len(parts) >= 2:

@@ -96,14 +96,14 @@ def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> N
 
 def replace_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """Overwrite ONLY the partitions present in ``df`` (reference
-    delete-where-then-insert, S4)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    delete-where-then-insert, S4). Dynamic mode is a per-write option, so
+    the session's conf, and every concurrent writer, is left alone."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def read(spark: SparkSession, path: str) -> DataFrame:

@@ -94,6 +94,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     keeps event timestamps DateTime64, encoding-stable).
     """
     global _TIER_ENABLED
+    ts_cols = _TS_COLUMNS.get(name)
+    if ts_cols:
+        # pinned on every call, memo hits included: after a conf reset the
+        # session must still read int64-ns sources (schema inference of
+        # TIMESTAMP(NANOS) fails without it), as after a first resolution
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (
         spark.sparkContext.applicationId,
         os.path.realpath(table_path(sf_dir, name)),
@@ -115,9 +121,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         out = spark.read.parquet(tier)
         _TABLE_MEMO[key] = out
         return out
-    ts_cols = _TS_COLUMNS.get(name)
     if ts_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(table_path(sf_dir, name))
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType

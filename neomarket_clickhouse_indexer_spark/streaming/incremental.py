@@ -57,6 +57,45 @@ def merge_candle_states(states: DataFrame) -> DataFrame:
     )
 
 
+def _fold(delta: DataFrame, state_dir: str, partition_col: str, merge,
+          epoch: int | None = None) -> None:
+    """Fold one microbatch's partial state into the parquet state table:
+    union ``delta`` with the state partitions it touches, re-aggregate with
+    ``merge(states)`` and overwrite only those partitions. The overwrite
+    mode is a per-write option, never session conf, so concurrent folds and
+    backfills cannot flip each other into a static (truncating) overwrite.
+
+    foreachBatch side effects are at-least-once: after a failure the same
+    epoch re-runs, and re-merging its delta would double-count volume. An
+    epoch marker makes the fold idempotent (the reference leans on
+    ReplacingMergeTree dedup for the same failure mode, ST2/ST4)."""
+    marker = None
+    if epoch is not None:
+        marker = os.path.join(state_dir, f"_folded_epoch_{epoch}")
+        if os.path.exists(marker):
+            return
+    delta = delta.localCheckpoint()  # cut lineage; delta is small
+    touched = [r[partition_col] for r in
+               delta.select(partition_col).distinct().collect()]
+    if not touched:
+        return
+    states = delta
+    if os.path.exists(state_dir):
+        states = delta.sparkSession.read.parquet(state_dir).filter(
+            F.col(partition_col).isin(touched)
+        ).unionByName(delta)
+    (
+        merge(states)
+        .repartition(partition_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(state_dir)
+    )
+    if marker is not None:
+        open(marker, "w").close()
+
+
 def _fold_batch(
     batch: DataFrame,
     state_dir: str,
@@ -67,41 +106,13 @@ def _fold_batch(
     bucket_seconds: int,
     epoch: int | None = None,
 ) -> None:
-    spark = batch.sparkSession
-    # foreachBatch side effects are at-least-once: after a failure the same
-    # epoch re-runs, and re-merging its delta would double-count volume.
-    # An epoch marker makes the fold idempotent (the reference leans on
-    # ReplacingMergeTree dedup for the same failure mode, ST2/ST4).
-    marker = None
-    if epoch is not None:
-        marker = os.path.join(state_dir, f"_folded_epoch_{epoch}")
-        if os.path.exists(marker):
-            return
     delta = ohlcv(batch, key=key, ts=ts, price=price, ord_col=ord_col,
                   bucket_seconds=bucket_seconds).withColumn(
         "bucket_date", F.to_date("bucket")
     )
-    delta = delta.localCheckpoint()  # cut lineage; delta is small
-    touched = [r["bucket_date"] for r in delta.select("bucket_date").distinct().collect()]
-    if not touched:
-        return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if os.path.exists(state_dir):
-        existing = spark.read.parquet(state_dir).filter(
-            F.col("bucket_date").isin(touched)
-        )
-        merged = merge_candle_states(existing.unionByName(delta))
-    else:
-        merged = merge_candle_states(delta)
-    (
-        merged.select(*CANDLE_STATE_COLS)
-        .repartition("bucket_date")
-        .write.mode("overwrite")
-        .partitionBy("bucket_date")
-        .parquet(state_dir)
-    )
-    if marker is not None:
-        open(marker, "w").close()
+    _fold(delta, state_dir, "bucket_date",
+          lambda states: merge_candle_states(states).select(*CANDLE_STATE_COLS),
+          epoch)
 
 
 def incremental_candles_stream(
@@ -162,32 +173,9 @@ def incremental_additive_stream(
     idempotent (same mechanics as the candle sink)."""
 
     def fold(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        marker = os.path.join(state_dir, f"_folded_epoch_{epoch}")
-        if os.path.exists(marker):
-            return
-        delta = partial_fn(batch).localCheckpoint()
-        touched = [r[partition_col] for r in
-                   delta.select(partition_col).distinct().collect()]
-        if not touched:
-            return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        if os.path.exists(state_dir):
-            existing = spark.read.parquet(state_dir).filter(
-                F.col(partition_col).isin(touched)
-            )
-            merged = merge_additive_states(
-                existing.unionByName(delta), keys, sum_cols
-            )
-        else:
-            merged = merge_additive_states(delta, keys, sum_cols)
-        (
-            merged.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(state_dir)
-        )
-        open(marker, "w").close()
+        _fold(partial_fn(batch), state_dir, partition_col,
+              lambda states: merge_additive_states(states, keys, sum_cols),
+              epoch)
 
     return (
         events_stream.writeStream.outputMode("update")

@@ -1,7 +1,8 @@
 """Sweep profiler: run EVERY bench HEADLINE query with the bench session
-shape and record, per query: wall (min-of-N), sum of job wall-clock on the
-last run, and job count. Ranks by driver gap (wall - jobsum) and by jobsum
-so optimization work targets the right term (guide §1.1: decide whether
+shape and record, per query: wall (min-of-N), job wall-clock on the last
+run (the union of job intervals, so concurrent jobs count once), and job
+count. Ranks by gap (wall - jobsum: time outside any job) and by jobsum so
+optimization work targets the right term (guide §1.1: decide whether
 time goes to compute or to scheduler/driver).
 
 Usage: python3 scripts/profile_all.py [--n 2] [--out /tmp/profile_all.json]
@@ -105,6 +106,24 @@ def _p(s: str) -> datetime:
     return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
 
 
+def _busy_s(jobs: list) -> float:
+    """Seconds in which at least one job ran: the union of the jobs'
+    [submission, completion] intervals, so overlapping jobs count once."""
+    spans = sorted(
+        (_p(j["submissionTime"]), _p(j["completionTime"]))
+        for j in jobs
+        if j.get("submissionTime") and j.get("completionTime")
+    )
+    busy, end = 0.0, None
+    for t0, t1 in spans:
+        if end is not None and t0 < end:
+            t0 = end  # the overlap is already counted
+        if t1 > t0:
+            busy += (t1 - t0).total_seconds()
+        end = t1 if end is None else max(end, t1)
+    return busy
+
+
 rows = {}
 for name in HEADLINE:
     fn = REGISTRY[name].fn
@@ -120,13 +139,8 @@ for name in HEADLINE:
         spark.sparkContext.setJobDescription(None)
         runs.append(round(dt, 3))
         last_jobs = [j for j in _jobs() if j["jobId"] not in before_ids]
-    jobsum = 0.0
-    ntasks = 0
-    for j in last_jobs:
-        t0s, t1s = j.get("submissionTime", ""), j.get("completionTime", "")
-        if t0s and t1s:
-            jobsum += (_p(t1s) - _p(t0s)).total_seconds()
-        ntasks += j.get("numTasks", 0)
+    jobsum = _busy_s(last_jobs)
+    ntasks = sum(j.get("numTasks", 0) for j in last_jobs)
     rows[name] = {
         "runs": runs,
         "wall_min": min(runs),

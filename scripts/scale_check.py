@@ -17,10 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from neomarket_clickhouse_indexer_spark.domain import _fifo_input
 from neomarket_clickhouse_indexer_spark.operators.candles import finalize, ohlcv
 from neomarket_clickhouse_indexer_spark.operators.dedup import latest_by_key
 from neomarket_clickhouse_indexer_spark.operators.fifo import fifo_allocate
-from neomarket_clickhouse_indexer_spark.queries.events import _fifo_input
 from neomarket_clickhouse_indexer_spark.session import get_spark
 from neomarket_clickhouse_indexer_spark.sources.tables import load_table
 

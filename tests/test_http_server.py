@@ -49,7 +49,6 @@ def test_every_reference_endpoint_answers(base):
         "/discover/markets?limit=5": "markets",
         "/leaderboard/explain?user_id=1&limit=10": "entries",
         "/leaderboard?sort=volume&limit=5": "entries",
-        "/chart?event_type=purchase&max_points=20": "points",
         "/pnl/1?mode=total": None,
         "/snapshots/1?limit=10": "snapshots",
         "/ledger/1?limit=10": "ledger",

@@ -1,0 +1,107 @@
+"""Served answers vs the registry's independent DuckDB oracles.
+
+The endpoints below share their backing aggregations with registry gates,
+so each served envelope must equal the gate's oracle SQL row for row:
+
+- ``/leaderboard?category=cat1`` vs ``CATEGORY_LEADERBOARD_SQL``
+- ``/leaderboard?sort=pnl`` and ``/market/holders`` vs ``FIFO_USER_PNL_SQL``
+- ``/pnl/:wallet`` (mode 4 over the gate's period) vs
+  ``FIFO_PNL_MODES_UNREALIZED_SQL``
+
+Values must match exactly (both sides ROUND(4) exact-decimal sums), as the
+registry's differential gates demand.
+"""
+
+from __future__ import annotations
+
+import duckdb
+import pytest
+
+from neomarket_clickhouse_indexer_spark.queries.events import (
+    CATEGORY_LEADERBOARD_SQL,
+    FIFO_PNL_MODES_UNREALIZED_SQL,
+    FIFO_USER_PNL_SQL,
+    PNL_PERIOD_END,
+    PNL_PERIOD_START,
+)
+from neomarket_clickhouse_indexer_spark.serve import ServeContext
+
+from .compare import _eq
+from .conftest import SF_SMOKE, register_duck_views
+
+
+@pytest.fixture(scope="module")
+def ctx(spark):
+    return ServeContext(spark, SF_SMOKE)
+
+
+@pytest.fixture(scope="module")
+def con():
+    c = duckdb.connect()
+    register_duck_views(c, SF_SMOKE)
+    yield c
+    c.close()
+
+
+def _oracle(con, sql: str, order: list[str], limit: int | None = None,
+            where: str = "") -> list[dict]:
+    q = f"SELECT * FROM ({sql}) o {where} ORDER BY {', '.join(order)}"
+    if limit is not None:
+        q += f" LIMIT {limit}"
+    df = con.execute(q).df()
+    return [
+        {c: (v.item() if hasattr(v, "item") else v) for c, v in row.items()}
+        for row in df.to_dict("records")
+    ]
+
+
+def _assert_rows_equal(got: list[dict], want: list[dict]) -> None:
+    assert len(got) == len(want), f"rows: served={len(got)} oracle={len(want)}"
+    for i, (g, w) in enumerate(zip(got, want)):
+        assert set(g) == set(w), (i, sorted(g), sorted(w))
+        bad = {c: (g[c], w[c]) for c in w if not _eq(g[c], w[c], 0.0)}
+        assert not bad, f"row {i}: (served, oracle) = {bad}"
+
+
+def test_category_leaderboard_matches_oracle(ctx, con):
+    out = ctx.leaderboard(category="cat1")
+    want = _oracle(con, CATEGORY_LEADERBOARD_SQL, ["rank"])
+    assert want, "fixture should have cat1 traders"
+    _assert_rows_equal(out["entries"], want)
+
+
+def test_pnl_leaderboard_matches_oracle(ctx, con):
+    out = ctx.leaderboard(sort="pnl")
+    want = _oracle(con, FIFO_USER_PNL_SQL, ["realized_pnl DESC", "key"], 100)
+    for rank, row in enumerate(want, 1):
+        row["rank"] = rank
+    _assert_rows_equal(out["entries"], want)
+
+
+def test_holders_match_oracle(ctx, con):
+    out = ctx.holders()
+    want = _oracle(con, FIFO_USER_PNL_SQL, ["open_qty DESC", "key"], 5,
+                   where="WHERE open_qty > 0")
+    want = [{"user_id": r["key"], "open_qty": r["open_qty"],
+             "open_cost": r["open_cost"]} for r in want]
+    _assert_rows_equal(out["holders"], want)
+
+
+def test_total_pnl_matches_oracle(ctx, con):
+    # the three wallets with the most open inventory: every mode-4 field
+    # (realized, unrealized mark, open qty) is non-trivial for them
+    rows = _oracle(con, FIFO_PNL_MODES_UNREALIZED_SQL,
+                   ["open_qty DESC", "key"], 3)
+    assert rows and rows[0]["open_qty"] > 0
+    for r in rows:
+        got = ctx.pnl(r["key"], mode="total", start=PNL_PERIOD_START,
+                      end=PNL_PERIOD_END)
+        want = {
+            "userId": r["key"],
+            "mode": "total",
+            "realizedPnl": r["realized_with_history"],
+            "unrealizedPnl": r["unrealized_all"],
+            "totalPnl": r["pnl_total"],
+            "openQty": r["open_qty"],
+        }
+        _assert_rows_equal([got], [want])

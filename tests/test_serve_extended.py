@@ -110,34 +110,3 @@ def test_incremental_additive_equals_batch(spark, tmp_path):
     )
     assert got.equals(want)
 
-
-def test_chart_series_downsamples_and_keeps_endpoints(ctx, spark):
-    out = ctx.chart_series("purchase", max_points=50)
-    pts = out["points"]
-    assert 0 < len(pts) <= 50
-    times = [p["time"] for p in pts]
-    assert times == sorted(times) and len(set(times)) == len(times)
-
-    # endpoints must be the series' first and last gap-filled hour
-    from neomarket_clickhouse_indexer_spark.queries.timeseries_q import (
-        events_gap_fill,
-    )
-
-    filled = (
-        events_gap_fill(spark, SF_SMOKE)
-        .filter(F.col("event_type") == "purchase")
-        .orderBy("bucket")
-        .select("bucket", "cents")
-        .collect()
-    )
-    assert len(pts) == min(50, len(filled))
-    assert pts[0]["cents"] == filled[0]["cents"]
-    assert pts[-1]["cents"] == filled[-1]["cents"]
-
-
-def test_chart_series_small_series_passthrough(ctx):
-    big = ctx.chart_series("purchase", max_points=2000)
-    # a year of hourly buckets is < 2000 only if the range is short; either
-    # way the clamp holds and positions are dense 0..n-1
-    poss = [p["pos"] for p in big["points"]]
-    assert poss == list(range(len(poss)))

@@ -226,6 +226,26 @@ def test_orders_lineitem_ns_encoding_also_dispatches(spark, tmp_path):
     assert dates(ns_dir) == dates(us_dir)
 
 
+def test_memo_hit_repins_nanos_conf(spark, tmp_path):
+    """After the session's ``nanosAsLong`` conf was reset, a memo hit must
+    pin it again, as a first resolution does: the memoized plan still runs,
+    and so does any fresh read of the int64-ns source in that session
+    (schema inference of TIMESTAMP(NANOS) fails without the conf)."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    sf = str(tmp_path)
+    src = _write_events(
+        tmp_path / "events.parquet",
+        pa.array([t * 1000 for t in _INSTANTS_US], pa.timestamp("ns")),
+    )
+    load_table(spark, sf, "events")
+    spark.conf.unset(key)
+    try:
+        assert load_table(spark, sf, "events").count() == len(_INSTANTS_US)
+        assert spark.read.parquet(src).count() == len(_INSTANTS_US)
+    finally:
+        spark.conf.set(key, "true")
+
+
 def test_int64_non_ns_magnitude_fails_loudly(spark, tmp_path):
     """ADVICE r4: an int64 date column whose magnitude is NOT nanoseconds
     (epoch-millis here) must raise, not silently misconvert."""
