@@ -15,6 +15,11 @@ deployment puts this behind a thread pool sized to Spark's scheduler
 (ThreadingHTTPServer here — Spark's scheduler is thread-safe and
 FAIR-schedules concurrent jobs), with the heavy state (candle tier,
 snapshot tier) prebuilt on the context exactly as the library callers do.
+The dashboard routes' answer tables live on the context, built on first
+request and again when the events source changes, so warm each one once
+before taking traffic (the first request per table pays its Spark build)
+and keep one context per process; the driver holds those tables in
+memory.
 """
 
 from __future__ import annotations

@@ -61,13 +61,17 @@ def enable_normalized_tier(enabled: bool = True) -> None:
 # an immutable logical plan (no data, no results), so resolving a given
 # (session, path, source-version, tier) once and handing back the same
 # plan is exactly what a catalog lookup does in a real engine. Keyed on
-# the source file's (mtime_ns, size) so a rewritten fixture can never be
-# served stale, and on the tier flag so the raw-path differential gate
-# and the bench tier never share an entry.
+# the session object, so a ``newSession()`` sibling (same application,
+# its own conf and temp views) resolves its own plan; the memoized
+# DataFrame holds its session, so that ``id`` cannot be reused while the
+# entry lives. Keyed on the source file's (mtime_ns, size) so a rewritten
+# fixture can never be served stale, and on the tier flag so the raw-path
+# differential gate and the bench tier never share an entry.
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
-def _source_token(path: str) -> tuple:
+def source_token(path: str) -> tuple:
+    """Version of a source file or directory: its ``(mtime_ns, size)``."""
     try:
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)
@@ -101,9 +105,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP(NANOS) fails without it), as after a first resolution
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (
-        spark.sparkContext.applicationId,
+        id(spark),
         os.path.realpath(table_path(sf_dir, name)),
-        _source_token(table_path(sf_dir, name)),
+        source_token(table_path(sf_dir, name)),
         _TIER_ENABLED,
     )
     hit = _TABLE_MEMO.get(key)

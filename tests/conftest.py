@@ -39,3 +39,20 @@ def register_duck_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
 def duck_correctness(duck):
     register_duck_views(duck, SF_CORRECTNESS)
     return duck
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``: the call runs under its
+    own job group, counted from the status tracker once the listener bus
+    has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -13,6 +13,7 @@ import pytest
 
 from neomarket_clickhouse_indexer_spark.serve import ServeContext
 from neomarket_clickhouse_indexer_spark.serve.http_server import serve
+from neomarket_clickhouse_indexer_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
 
@@ -80,3 +81,18 @@ def test_options_preflight(base):
     with urllib.request.urlopen(req, timeout=60) as r:
         assert r.status == 204
         assert r.headers["Access-Control-Allow-Origin"] == "*"
+
+
+def test_negative_offset_is_400_envelope(base):
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _get(base, "/activity?user_id=12&offset=-5")
+    assert ei.value.code == 400
+    assert "offset" in json.loads(ei.value.read())["error"]
+
+
+def test_activity_limit_is_clamped(base, spark):
+    n = load_table(spark, SF_SMOKE, "events").filter("user_id = 12").count()
+    _, out = _get(base, "/activity?user_id=12&limit=-1")
+    assert len(out["events"]) == 1
+    _, out = _get(base, f"/activity?user_id=12&limit={10**9}")
+    assert len(out["events"]) == min(200, n)

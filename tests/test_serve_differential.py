@@ -7,6 +7,9 @@ so each served envelope must equal the gate's oracle SQL row for row:
 - ``/leaderboard?sort=pnl`` and ``/market/holders`` vs ``FIFO_USER_PNL_SQL``
 - ``/pnl/:wallet`` (mode 4 over the gate's period) vs
   ``FIFO_PNL_MODES_UNREALIZED_SQL``
+- ``/discover/markets`` vs ``MARKET_OVERVIEW_SQL``
+- ``/market/stats`` vs inline DuckDB SQL over the events from 24h before
+  ``domain.FIXED_NOW`` on
 
 Values must match exactly (both sides ROUND(4) exact-decimal sums), as the
 registry's differential gates demand.
@@ -17,10 +20,13 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from neomarket_clickhouse_indexer_spark.determinism import EVENTS_SQL
+from neomarket_clickhouse_indexer_spark.domain import FIXED_NOW
 from neomarket_clickhouse_indexer_spark.queries.events import (
     CATEGORY_LEADERBOARD_SQL,
     FIFO_PNL_MODES_UNREALIZED_SQL,
     FIFO_USER_PNL_SQL,
+    MARKET_OVERVIEW_SQL,
     PNL_PERIOD_END,
     PNL_PERIOD_START,
 )
@@ -105,3 +111,36 @@ def test_total_pnl_matches_oracle(ctx, con):
             "openQty": r["open_qty"],
         }
         _assert_rows_equal([got], [want])
+
+
+def test_discover_matches_oracle(ctx, con):
+    out = ctx.discover(limit=100)
+    want = _oracle(con, MARKET_OVERVIEW_SQL, ["volume DESC", "event_type"], 100)
+    assert want, "fixture should have markets"
+    want = [{"event_type": r["event_type"], "volume": r["volume"],
+             "events": r["n_events"], "lastPrice": r["last_value"],
+             "uniqueUsers": r["n_users"]} for r in want]
+    _assert_rows_equal(out["markets"], want)
+
+
+# the served window has a lower bound only, like the reference's
+# ``ts >= now() - INTERVAL 24 HOUR``; the fixture runs past FIXED_NOW
+MARKET_STATS_SQL = f"""
+SELECT event_type AS key,
+       COUNT(*) FILTER (WHERE day) AS trades24h,
+       COALESCE(CAST(ROUND(SUM(CAST(value AS DECIMAL(30,10)))
+                FILTER (WHERE day), 4) AS DOUBLE), 0.0) AS volume24h,
+       COUNT(DISTINCT user_id) FILTER (WHERE day) AS uniqueUsers24h,
+       arg_max(value, event_id) AS lastPrice
+FROM (SELECT *, ts >= TIMESTAMP '{FIXED_NOW}' - INTERVAL 24 HOURS AS day
+      FROM {EVENTS_SQL} e) w
+GROUP BY event_type
+"""
+
+
+def test_market_stats_match_oracle(ctx, con):
+    want = _oracle(con, MARKET_STATS_SQL, ["key"])
+    assert want and any(r["trades24h"] for r in want)
+    want.append({"key": "no-such-market", "trades24h": 0, "volume24h": 0.0,
+                 "uniqueUsers24h": 0, "lastPrice": None})
+    _assert_rows_equal([ctx.market_stats(r["key"]) for r in want], want)

@@ -246,6 +246,23 @@ def test_memo_hit_repins_nanos_conf(spark, tmp_path):
         spark.conf.set(key, "true")
 
 
+def test_memo_is_per_session(spark, tmp_path):
+    """A ``newSession()`` sibling shares the application but has its own
+    conf and temp views: it must resolve its own plan, not be handed the
+    first session's memoized DataFrame. Each session still hits its own
+    memo entry."""
+    sf = str(tmp_path)
+    _write_events(tmp_path / "events.parquet",
+                  pa.array(_INSTANTS_US, pa.timestamp("us")))
+    sibling = spark.newSession()
+    mine = load_table(spark, sf, "events")
+    theirs = load_table(sibling, sf, "events")
+    assert mine.sparkSession is spark
+    assert theirs.sparkSession is sibling
+    assert load_table(sibling, sf, "events") is theirs
+    assert load_table(spark, sf, "events") is mine
+
+
 def test_int64_non_ns_magnitude_fails_loudly(spark, tmp_path):
     """ADVICE r4: an int64 date column whose magnitude is NOT nanoseconds
     (epoch-millis here) must raise, not silently misconvert."""
