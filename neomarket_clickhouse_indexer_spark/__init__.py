@@ -9,7 +9,7 @@ Polymarket → ClickHouse indexer + analytics API), built Spark-first:
 - explicit derived/pre-aggregated tables instead of ClickHouse materialized
   views,
 - window-function dedup views instead of ReplacingMergeTree ``FINAL``,
-- a grouped-map (``applyInPandas``) FIFO-lot ledger as the one custom
+- a partition-wise (``mapInPandas``) FIFO-lot ledger as the one custom
   stateful operator,
 - plus large-scale training-data pipeline operators (dedup, similarity
   search, text analysis, multimodal plumbing) designed for 100 TB scale.

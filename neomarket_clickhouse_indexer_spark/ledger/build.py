@@ -3,19 +3,24 @@ parallel.
 
 The reference builds one wallet per CLI run (build-ledger.ts) or a worker
 pool of 2 (backfill-ledger.ts:60); here wallet-parallelism is the cluster's
-partition count. One shuffle (repartition on wallet) + in-partition sort +
-a single mapInPandas pass — identical mechanics to operators/fifo.py, with
-the full domain state machine inside (SURVEY §2.10 O1/O2).
+partition count. Every builder runs through the FIFO operators' driver,
+``operators.fifo.by_key``: one shuffle (repartition on wallet) +
+in-partition sort + a single mapInPandas pass, with the full domain state
+machine inside (SURVEY §2.10 O1/O2).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from ..operators.fifo import by_key
 from .engine import LedgerEngine
+
+# a wallet's replay order: the engine's canonical order key
+# (ledger-engine.ts:1109-1114)
+WALLET_ORDER = ("ts", "block_number", "log_index", "type")
 
 LEDGER_SCHEMA = (
     "wallet string, event_type string, block_timestamp timestamp, "
@@ -74,13 +79,7 @@ def _replay_wallet(wallet: str, g: pd.DataFrame,
 
 
 def _runner(kind: str, snapshot_interval_s: int | None):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
+    def run(pdf: pd.DataFrame) -> pd.DataFrame | None:
         outs = []
         for wallet, g in pdf.groupby("wallet", sort=False):
             eng = _replay_wallet(wallet, g, snapshot_interval_s)
@@ -92,31 +91,24 @@ def _runner(kind: str, snapshot_interval_s: int | None):
                 recs = eng.realized_events
             if recs:
                 outs.append(pd.DataFrame(recs))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else None
 
     return run
-
-
-def _prepared(events: DataFrame) -> DataFrame:
-    return events.repartition("wallet").sortWithinPartitions(
-        "wallet", "ts", "block_number", "log_index", "type"
-    )
 
 
 def build_wallet_ledger(events: DataFrame) -> DataFrame:
     """Normalized events (ledger/prep.py schema) → wallet_ledger entries
     (reference table 001:292-313)."""
-    return _prepared(events).mapInPandas(_runner("entries", None), LEDGER_SCHEMA)
+    return by_key(events, "wallet", WALLET_ORDER, _runner("entries", None),
+                  LEDGER_SCHEMA)
 
 
 def build_wallet_snapshots(events: DataFrame, interval_s: int = 86400) -> DataFrame:
     """Normalized events → periodic PnL snapshots (reference
     wallet_pnl_snapshots 001:318-332; snapshot emitter
     ledger-engine.ts:1116-1152)."""
-    return _prepared(events).mapInPandas(
-        _runner("snapshots", interval_s), SNAPSHOT_SCHEMA
-    )
+    return by_key(events, "wallet", WALLET_ORDER,
+                  _runner("snapshots", interval_s), SNAPSHOT_SCHEMA)
 
 
 MARKS_SCHEMA = (
@@ -137,24 +129,16 @@ def build_pnl_marks(
     price the open lots, optionally restricted to lots entered inside
     [entry_start, entry_end] (PnL mode 3). One replay per wallet, same
     repartition-by-wallet shape as the other builders."""
-    import pandas as pd
-
     e_start = pd.Timestamp(entry_start) if entry_start is not None else None
     e_end = pd.Timestamp(entry_end) if entry_end is not None else None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for wallet, g in pdf.groupby("wallet", sort=False):
             eng = _replay_wallet(wallet, g, None)
             unreal, cost, value = eng.open_positions_report(e_start, e_end)
             rows.append((wallet, unreal, cost, value))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             rows,
             columns=[
                 "wallet", "unrealized_pnl", "open_positions_cost",
@@ -162,13 +146,12 @@ def build_pnl_marks(
             ],
         )
 
-    from pyspark.sql import functions as F
-
     truncated = events.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
-    return _prepared(truncated).mapInPandas(run, MARKS_SCHEMA)
+    return by_key(truncated, "wallet", WALLET_ORDER, run, MARKS_SCHEMA)
 
 
 def build_realized_events(events: DataFrame) -> DataFrame:
     """Normalized events → per-slice realized PnL events (feeds the O3 PnL
     modes, ledger-engine.ts:1955-2055)."""
-    return _prepared(events).mapInPandas(_runner("realized", None), REALIZED_SCHEMA)
+    return by_key(events, "wallet", WALLET_ORDER, _runner("realized", None),
+                  REALIZED_SCHEMA)

@@ -14,18 +14,20 @@ SQL as cumulative-interval overlap (each buy covers cumulative unit interval
 which is what the DuckDB differential oracle uses — a genuinely independent
 algorithm.
 
-Scale notes: ``groupBy(key).applyInPandas`` shuffles once on the key and
-streams each group through pandas via Arrow. Keys (wallets/users) are
-numerous and small → near-perfect parallelism; a single hot key degrades to
-one task but stays bounded by that key's event count. The domain ledger
-(neomarket_clickhouse_indexer_spark.ledger) builds the full 13-event-type
-state machine on the same pattern.
+One walk, one driver: :func:`_match` is the only lot-matching loop, and the
+FIFO operators are folds over its slices. :func:`by_key` runs every operator
+here and the ledger builders (ledger/build.py): it repartitions on the key
+(one shuffle), sorts within partitions and streams each partition through
+pandas via Arrow with ``mapInPandas``. Keys (wallets/users) are numerous and
+small → near-perfect parallelism; a single hot key degrades to one task but
+stays bounded by that key's event count.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,75 +59,13 @@ def _units_round4(u: int) -> float:
     return math.copysign(q, u) / 1e4
 
 
-def _allocate_core(side, qty, price) -> tuple:
-    """Two-pointer FIFO match over one key's numpy columns (rows must
-    already be in (ts, ord) time order). Returns the output tuple —
-    no pandas objects (a DataFrame per key dominates runtime at scale).
-
-    Money totals are accumulated as exact 1e-10-unit integers (``_q10`` per
-    matched pair / open lot), matching ``fifo_allocate_sql``'s exact
-    DECIMAL(30,10) sums independent of accumulation order."""
-    is_buy = side == 1
-    b_qty = qty[is_buy]
-    b_px = price[is_buy]
-    s_qty = qty[~is_buy]
-    s_px = price[~is_buy]
-
-    realized_u = 0  # integer 1e-10 units
-    matched = 0
-    bi = 0
-    b_rem = b_qty[0] if len(b_qty) else 0
-    for j in range(len(s_qty)):
-        need = s_qty[j]
-        while need > 0 and bi < len(b_qty):
-            take = min(need, b_rem)
-            realized_u += _q10(take * (s_px[j] - b_px[bi]))
-            matched += int(take)
-            need -= take
-            b_rem -= take
-            if b_rem == 0:
-                bi += 1
-                b_rem = b_qty[bi] if bi < len(b_qty) else 0
-        if bi >= len(b_qty) and need > 0:
-            break  # oversold remainder stays unmatched
-
-    open_qty = int(b_qty.sum()) - matched
-    # open cost = cost of the unmatched tail of the buy queue
-    open_cost_u = 0
-    rem = open_qty
-    for i in range(len(b_qty) - 1, -1, -1):
-        if rem <= 0:
-            break
-        take = min(rem, int(b_qty[i]))
-        open_cost_u += _q10(take * b_px[i])
-        rem -= take
-    return (
-        int(b_qty.sum()),
-        int(s_qty.sum()),
-        matched,
-        _units_round4(realized_u),
-        open_qty,
-        _units_round4(open_cost_u),
-    )
-
-
-def _allocate_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-group wrapper (tests / small inputs)."""
-    vals = _allocate_core(
-        pdf["side"].to_numpy(), pdf["qty"].to_numpy(), pdf["price"].to_numpy()
-    )
-    return pd.DataFrame(
-        [(pdf["key"].iloc[0], *vals)],
-        columns=[
-            "key", "buy_qty", "sell_qty", "matched_qty",
-            "realized_pnl", "open_qty", "open_cost",
-        ],
-    )
-
-
-def _allocate_partition(batches) -> "pd.DataFrame":
-    """Partition-wise driver: all keys in the partition arrive sorted by
-    (key, ts, ord); slice per key and run the two-pointer match.
+def by_key(df: DataFrame, key: str, order: tuple[str, ...], fn,
+           schema: str) -> DataFrame:
+    """Run ``fn`` once per partition over whole keys in ``(key, *order)``
+    order: ``repartition(key)``, ``sortWithinPartitions``, then one
+    ``mapInPandas`` pass. ``fn`` takes the partition's rows as one pandas
+    frame and returns the output frame, or None for no rows; an empty
+    partition is skipped.
 
     One Python call per *partition* instead of per *group* — the per-group
     Arrow batch + pandas construction overhead dominates grouped-map UDFs
@@ -133,33 +73,101 @@ def _allocate_partition(batches) -> "pd.DataFrame":
     at scale: a partition must fit in worker memory, which repartitioning
     on the key guarantees for any realistic key cardinality.
     """
-    chunks = list(batches)
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    if pdf.empty:
-        return
-    # slice per key by contiguous runs (rows arrive sorted by key) and emit
-    # ONE output frame per partition — building a pandas DataFrame per key
-    # dominated wall time ~40× at 30k keys
-    import numpy as np
 
-    keys = pdf["key"].to_numpy()
-    side = pdf["side"].to_numpy()
-    qty = pdf["qty"].to_numpy()
-    price = pdf["price"].to_numpy()
-    boundaries = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-    out_rows = []
-    for s_i, e_i in zip(boundaries[:-1], boundaries[1:]):
-        vals = _allocate_core(side[s_i:e_i], qty[s_i:e_i], price[s_i:e_i])
-        out_rows.append((keys[s_i], *vals))
-    yield pd.DataFrame(
-        out_rows,
-        columns=[
-            "key", "buy_qty", "sell_qty", "matched_qty",
-            "realized_pnl", "open_qty", "open_cost",
-        ],
+    def run(batches):
+        chunks = list(batches)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        if pdf.empty:
+            return
+        out = fn(pdf)
+        if out is not None:
+            yield out
+
+    return (
+        df.repartition(key)
+        .sortWithinPartitions(key, *order)
+        .mapInPandas(run, schema=schema)
     )
+
+
+def _match(side, qty) -> tuple[list, list]:
+    """The FIFO walk over one key's rows in (ts, ord) order: each sell
+    consumes the oldest buys' units first. Returns ``(slices, open_)``:
+    ``slices`` lists the matched ``(buy index, sell index, units)`` in walk
+    order, zero-unit slices (a zero-qty buy met by a sell) included;
+    ``open_`` lists ``(buy index, units left)`` for every buy the walk did
+    not use up. Units a sell asks for after the buys run out stay
+    unmatched (oversold)."""
+    left = qty.tolist()
+    buys = np.flatnonzero(side == 1).tolist()
+    slices = []
+    k = 0  # buys[k] is the oldest buy with units left
+    for s in np.flatnonzero(side != 1).tolist():
+        need = left[s]
+        while need > 0 and k < len(buys):
+            b = buys[k]
+            take = min(need, left[b])
+            slices.append((b, s, take))
+            need -= take
+            left[b] -= take
+            if left[b] == 0:
+                k += 1
+    return slices, [(b, left[b]) for b in buys[k:]]
+
+
+def _per_key(fold, schema: str):
+    """The partition function of a FIFO operator: ``fold(ts, side, qty,
+    price)`` maps one key's numpy columns to its output rows (without the
+    key)."""
+    columns = [f.split()[0] for f in schema.split(",")]
+
+    def frame(pdf: pd.DataFrame) -> pd.DataFrame:
+        # slice per key by contiguous runs (rows arrive sorted by key) and
+        # emit ONE output frame per partition — building a pandas DataFrame
+        # per key dominated wall time ~40× at 30k keys
+        keys = pdf["key"].to_numpy()
+        cols = [pdf[c].to_numpy() for c in ("ts", "side", "qty", "price")]
+        cuts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
+        rows = [
+            (keys[a], *row)
+            for a, b in zip(cuts[:-1], cuts[1:])
+            for row in fold(*(c[a:b] for c in cols))
+        ]
+        return pd.DataFrame(rows, columns=columns)
+
+    return frame
+
+
+def _fifo_by_key(df: DataFrame, fold, schema: str) -> DataFrame:
+    return by_key(
+        df.select("key", "ts", "ord", "side", "qty", "price"),
+        "key", ("ts", "ord"), _per_key(fold, schema), schema,
+    )
+
+
+def _allocate_fold(ts, side, qty, price) -> list[tuple]:
+    """Allocation totals of one key. Money totals are accumulated as exact
+    1e-10-unit integers (``_q10`` per matched slice / open lot), matching
+    ``fifo_allocate_sql``'s exact DECIMAL(30,10) sums independent of
+    accumulation order."""
+    slices, open_ = _match(side, qty)
+    px = price.tolist()
+    is_buy = side == 1
+    return [(
+        int(qty[is_buy].sum()),
+        int(qty[~is_buy].sum()),
+        sum(u for _, _, u in slices),
+        _units_round4(sum(_q10(u * (px[s] - px[b])) for b, s, u in slices)),
+        sum(u for _, u in open_),
+        _units_round4(sum(_q10(u * px[b]) for b, u in open_)),
+    )]
+
+
+def _allocate_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Single-group wrapper (tests / small inputs)."""
+    return _per_key(_allocate_fold, ALLOC_SCHEMA)(pdf)
 
 
 def fifo_allocate(df: DataFrame) -> DataFrame:
@@ -170,12 +178,7 @@ def fifo_allocate(df: DataFrame) -> DataFrame:
     mapInPandas pass. No driver-side iteration; wallet/user parallelism is
     the partition count.
     """
-    prepared = (
-        df.select("key", "ts", "ord", "side", "qty", "price")
-        .repartition("key")
-        .sortWithinPartitions("key", "ts", "ord")
-    )
-    return prepared.mapInPandas(_allocate_partition, schema=ALLOC_SCHEMA)
+    return _fifo_by_key(df, _allocate_fold, ALLOC_SCHEMA)
 
 
 def fifo_allocate_sql(events_rel: str) -> str:
@@ -267,38 +270,14 @@ def _avgcost_core(side, qty, price) -> tuple:
     return (round(pos, 6), round(avg_cost, 6), round(realized, 4), len(side))
 
 
-def _avgcost_partition(batches):
-    chunks = list(batches)
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    if pdf.empty:
-        return
-    import numpy as np
-
-    keys = pdf["key"].to_numpy()
-    side = pdf["side"].to_numpy()
-    qty = pdf["qty"].to_numpy()
-    price = pdf["price"].to_numpy()
-    boundaries = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-    rows = []
-    for s_i, e_i in zip(boundaries[:-1], boundaries[1:]):
-        rows.append((keys[s_i], *_avgcost_core(side[s_i:e_i], qty[s_i:e_i], price[s_i:e_i])))
-    yield pd.DataFrame(
-        rows, columns=["key", "position", "avg_cost", "realized", "n"]
-    )
-
-
 def avg_cost_positions(df: DataFrame) -> DataFrame:
     """Input columns: key, ts, ord, side (1/-1), qty, price → final
     (position, avg_cost, realized, n) per key under sequential average-cost
     accounting with oversell-as-income."""
-    prepared = (
-        df.select("key", "ts", "ord", "side", "qty", "price")
-        .repartition("key")
-        .sortWithinPartitions("key", "ts", "ord")
+    return _fifo_by_key(
+        df, lambda ts, side, qty, price: [_avgcost_core(side, qty, price)],
+        AVGCOST_SCHEMA,
     )
-    return prepared.mapInPandas(_avgcost_partition, schema=AVGCOST_SCHEMA)
 
 
 def avg_cost_positions_sql(events_rel: str) -> str:
@@ -359,88 +338,36 @@ PNL_MODES_SCHEMA = (
 )
 
 
-def _modes_core(ts, side, qty, price, start, end) -> tuple:
-    is_buy = side == 1
-    b_qty, b_px, b_ts = qty[is_buy], price[is_buy], ts[is_buy]
-    s_qty, s_px, s_ts = qty[~is_buy], price[~is_buy], ts[~is_buy]
+def _period_units(slices, ts, px, start, end) -> tuple[int, int, int]:
+    """Realized 1e-10 units of ``slices``: all of them, those that exit in
+    [start, end) (with_history), and those of them entered on or after
+    start (period_only)."""
+    exit_in = ((start <= ts) & (ts < end)).tolist()
+    entered = (ts >= start).tolist()
+    total_u = wh_u = po_u = 0
+    for b, s, u in slices:
+        x = _q10(u * (px[s] - px[b]))
+        total_u += x
+        if exit_in[s]:
+            wh_u += x
+            if entered[b]:
+                po_u += x
+    return total_u, wh_u, po_u
 
-    total_u = wh_u = po_u = 0  # integer 1e-10 units (see _q10)
-    matched = 0
-    bi = 0
-    b_rem = b_qty[0] if len(b_qty) else 0
-    for j in range(len(s_qty)):
-        need = s_qty[j]
-        exit_in = start <= s_ts[j] < end
-        while need > 0 and bi < len(b_qty):
-            take = min(need, b_rem)
-            u = _q10(take * (s_px[j] - b_px[bi]))
-            total_u += u
-            if exit_in:
-                wh_u += u
-                if b_ts[bi] >= start:
-                    po_u += u
-            matched += int(take)
-            need -= take
-            b_rem -= take
-            if b_rem == 0:
-                bi += 1
-                b_rem = b_qty[bi] if bi < len(b_qty) else 0
-        if bi >= len(b_qty) and need > 0:
-            break
-    return (
-        _units_round4(total_u),
-        _units_round4(wh_u),
-        _units_round4(po_u),
-        matched,
-    )
+
+def _modes_fold(ts, side, qty, price, start, end) -> list[tuple]:
+    slices, _ = _match(side, qty)
+    units = _period_units(slices, ts, price.tolist(), start, end)
+    return [(*map(_units_round4, units), sum(u for _, _, u in slices))]
 
 
 def fifo_realized_modes(df: DataFrame, start: str, end: str) -> DataFrame:
     """Input columns as :func:`fifo_allocate`; output one row per key with
     realized PnL under each mode for the period [start, end)."""
-    import numpy as np
-
-    start64 = np.datetime64(start)
-    end64 = np.datetime64(end)
-
-    def _part(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        keys = pdf["key"].to_numpy()
-        ts = pdf["ts"].to_numpy()
-        side = pdf["side"].to_numpy()
-        qty = pdf["qty"].to_numpy()
-        price = pdf["price"].to_numpy()
-        boundaries = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-        rows = []
-        for s_i, e_i in zip(boundaries[:-1], boundaries[1:]):
-            rows.append(
-                (
-                    keys[s_i],
-                    *_modes_core(
-                        ts[s_i:e_i], side[s_i:e_i], qty[s_i:e_i],
-                        price[s_i:e_i], start64, end64,
-                    ),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "key", "realized_total", "realized_with_history",
-                "realized_period_only", "matched_qty",
-            ],
-        )
-
-    prepared = (
-        df.select("key", "ts", "ord", "side", "qty", "price")
-        .repartition("key")
-        .sortWithinPartitions("key", "ts", "ord")
+    start64, end64 = np.datetime64(start), np.datetime64(end)
+    return _fifo_by_key(
+        df, lambda *cols: _modes_fold(*cols, start64, end64), PNL_MODES_SCHEMA
     )
-    return prepared.mapInPandas(_part, schema=PNL_MODES_SCHEMA)
 
 
 def fifo_realized_modes_sql(events_rel: str, start: str, end: str) -> str:
@@ -509,52 +436,26 @@ PNL_UNREALIZED_SCHEMA = (
 )
 
 
-def _unreal_core(ts, side, qty, price, start, end) -> tuple:
-    """FIFO walk over one key's events (pre-filtered to ts < end): realized
-    units under modes 1-2 plus the open-lot unrealized mark at period end.
-    All sums in exact 1e-10 integer units (see _q10)."""
-    is_buy = side == 1
-    b_qty, b_px, b_ts = qty[is_buy], price[is_buy], ts[is_buy]
-    s_qty, s_px = qty[~is_buy], price[~is_buy]
-    s_ts = ts[~is_buy]
-
-    wh_u = po_u = 0
-    bi = 0
-    b_rem = b_qty[0] if len(b_qty) else 0
-    for j in range(len(s_qty)):
-        need = s_qty[j]
-        exit_in = start <= s_ts[j] < end
-        while need > 0 and bi < len(b_qty):
-            take = min(need, b_rem)
-            u = _q10(take * (s_px[j] - b_px[bi]))
-            if exit_in:
-                wh_u += u
-                if b_ts[bi] >= start:
-                    po_u += u
-            need -= take
-            b_rem -= take
-            if b_rem == 0:
-                bi += 1
-                b_rem = b_qty[bi] if bi < len(b_qty) else 0
-        if bi >= len(b_qty) and need > 0:
-            break
-
-    # open lots: buys [0, bi) fully consumed; buy bi has b_rem left; > bi
-    # untouched. Mark every remaining unit at the key's last trade price.
-    open_q = 0
-    un_all_u = un_per_u = 0
-    if len(ts):
-        last_px = price[-1]  # input sorted by (ts, ord); replay ends < end
-        for i in range(bi, len(b_qty)):
-            rem = b_rem if i == bi else b_qty[i]
-            if rem <= 0:
-                continue
-            open_q += int(rem)
-            u = _q10(rem * (last_px - b_px[i]))
-            un_all_u += u
-            if b_ts[i] >= start:
-                un_per_u += u
-    return (
+def _unreal_fold(ts, side, qty, price, start, end) -> list[tuple]:
+    """Realized units under modes 1-2 plus the open-lot unrealized mark at
+    period end for one key's events (pre-filtered to ts < end). All sums in
+    exact 1e-10 integer units (see _q10)."""
+    slices, open_ = _match(side, qty)
+    px = price.tolist()
+    _, wh_u, po_u = _period_units(slices, ts, px, start, end)
+    # mark every remaining unit at the key's last trade price (input sorted
+    # by (ts, ord); replay ends < end)
+    last_px = px[-1]
+    open_q = un_all_u = un_per_u = 0
+    for b, u in open_:
+        if u <= 0:
+            continue
+        open_q += u
+        x = _q10(u * (last_px - px[b]))
+        un_all_u += x
+        if ts[b] >= start:
+            un_per_u += x
+    return [(
         _units_round4(wh_u),
         _units_round4(po_u),
         open_q,
@@ -562,57 +463,18 @@ def _unreal_core(ts, side, qty, price, start, end) -> tuple:
         _units_round4(un_per_u),
         _units_round4(wh_u + un_all_u),
         _units_round4(po_u + un_per_u),
-    )
+    )]
 
 
 def fifo_unrealized_modes(df: DataFrame, start: str, end: str) -> DataFrame:
     """PnL modes 3-4: realized (modes 1-2 filters) + unrealized mark of the
     open lots at period end. Input columns as :func:`fifo_allocate`."""
-    import numpy as np
-
-    start64 = np.datetime64(start)
-    end64 = np.datetime64(end)
-
-    def _part(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        keys = pdf["key"].to_numpy()
-        ts = pdf["ts"].to_numpy()
-        side = pdf["side"].to_numpy()
-        qty = pdf["qty"].to_numpy()
-        price = pdf["price"].to_numpy()
-        boundaries = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-        rows = []
-        for s_i, e_i in zip(boundaries[:-1], boundaries[1:]):
-            rows.append(
-                (
-                    keys[s_i],
-                    *_unreal_core(
-                        ts[s_i:e_i], side[s_i:e_i], qty[s_i:e_i],
-                        price[s_i:e_i], start64, end64,
-                    ),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "key", "realized_with_history", "realized_period_only",
-                "open_qty", "unrealized_all", "unrealized_period",
-                "pnl_total", "pnl_period",
-            ],
-        )
-
-    prepared = (
-        df.filter(F.col("ts") < F.lit(end).cast("timestamp"))
-        .select("key", "ts", "ord", "side", "qty", "price")
-        .repartition("key")
-        .sortWithinPartitions("key", "ts", "ord")
+    start64, end64 = np.datetime64(start), np.datetime64(end)
+    return _fifo_by_key(
+        df.filter(F.col("ts") < F.lit(end).cast("timestamp")),
+        lambda *cols: _unreal_fold(*cols, start64, end64),
+        PNL_UNREALIZED_SCHEMA,
     )
-    return prepared.mapInPandas(_part, schema=PNL_UNREALIZED_SCHEMA)
 
 
 def fifo_unrealized_modes_sql(events_rel: str, start: str, end: str) -> str:
@@ -713,73 +575,25 @@ LEFT JOIN uagg ON k.key = uagg.key
 ROLLUP_1D_SCHEMA = "key bigint, day date, realized_pnl double, matched_qty bigint"
 
 
-def _rollup_core(ts, side, qty, price, out_rows, key) -> None:
-    """Two-pointer FIFO match accumulating exact 1e-10 units per exit day.
-    Appends (key, day, realized, matched) rows to ``out_rows``."""
-    is_buy = side == 1
-    b_qty, b_px = qty[is_buy], price[is_buy]
-    s_qty, s_px, s_ts = qty[~is_buy], price[~is_buy], ts[~is_buy]
-
-    acc: dict = {}  # numpy datetime64[D] -> [units, matched]
-    bi = 0
-    b_rem = b_qty[0] if len(b_qty) else 0
-    for j in range(len(s_qty)):
-        need = s_qty[j]
-        day = s_ts[j].astype("datetime64[D]")
-        while need > 0 and bi < len(b_qty):
-            take = min(need, b_rem)
-            slot = acc.setdefault(day, [0, 0])
-            slot[0] += _q10(take * (s_px[j] - b_px[bi]))
-            slot[1] += int(take)
-            need -= take
-            b_rem -= take
-            if b_rem == 0:
-                bi += 1
-                b_rem = b_qty[bi] if bi < len(b_qty) else 0
-        if bi >= len(b_qty) and need > 0:
-            break
-    for day in sorted(acc):
-        u, m = acc[day]
-        out_rows.append((key, day.astype("O"), _units_round4(u), m))
+def _rollup_fold(ts, side, qty, price) -> list[tuple]:
+    """One key's matched slices regrouped by exit (sell) day, in exact
+    1e-10 units: (day, realized, matched) rows in day order."""
+    slices, _ = _match(side, qty)
+    px = price.tolist()
+    days = ts.astype("datetime64[D]").tolist()
+    acc: dict = {}  # datetime.date -> [units, matched]
+    for b, s, u in slices:
+        slot = acc.setdefault(days[s], [0, 0])
+        slot[0] += _q10(u * (px[s] - px[b]))
+        slot[1] += u
+    return [(day, _units_round4(x), m) for day, (x, m) in sorted(acc.items())]
 
 
 def fifo_rollup_1d(df: DataFrame) -> DataFrame:
     """Input columns as :func:`fifo_allocate`; output one row per
     (key, exit day) with that day's realized PnL and matched quantity.
     Same single-shuffle partition-wise plan as the allocator."""
-    import numpy as np  # noqa: F401  (ts arrives as datetime64)
-
-    def _part(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        import numpy as np
-
-        keys = pdf["key"].to_numpy()
-        ts = pdf["ts"].to_numpy()
-        side = pdf["side"].to_numpy()
-        qty = pdf["qty"].to_numpy()
-        price = pdf["price"].to_numpy()
-        boundaries = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-        rows: list = []
-        for s_i, e_i in zip(boundaries[:-1], boundaries[1:]):
-            _rollup_core(
-                ts[s_i:e_i], side[s_i:e_i], qty[s_i:e_i], price[s_i:e_i],
-                rows, keys[s_i],
-            )
-        yield pd.DataFrame(
-            rows, columns=["key", "day", "realized_pnl", "matched_qty"]
-        )
-
-    prepared = (
-        df.select("key", "ts", "ord", "side", "qty", "price")
-        .repartition("key")
-        .sortWithinPartitions("key", "ts", "ord")
-    )
-    return prepared.mapInPandas(_part, schema=ROLLUP_1D_SCHEMA)
+    return _fifo_by_key(df, _rollup_fold, ROLLUP_1D_SCHEMA)
 
 
 def fifo_rollup_1d_sql(events_rel: str) -> str:

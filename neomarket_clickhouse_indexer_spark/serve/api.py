@@ -134,6 +134,12 @@ class ServeContext:
 
         return self._table("candle_state_fresh", lag_seconds, check)
 
+    def _wallet_events(self, user_id: int) -> DataFrame:
+        """The domain events of one user's wallet, the input of every
+        per-wallet endpoint."""
+        return domain._domain_events(self.spark, self.sf_dir).filter(
+            F.col("wallet") == f"0xw{user_id}")
+
     # /leaderboard (src/api.ts:1322-1473); category= routes to the filtered
     # raw-join plan (queryLeaderboardFromRawFiltered, src/api.ts:597-635)
     def leaderboard(self, sort: str = "volume", limit: int = 100,
@@ -326,10 +332,7 @@ class ServeContext:
         from ..verify.invariants import check_non_negative_inventory
 
         wallet = f"0xw{user_id}"
-        events = domain._domain_events(self.spark, self.sf_dir).filter(
-            F.col("wallet") == wallet
-        )
-        entries = build_wallet_ledger(events)
+        entries = build_wallet_ledger(self._wallet_events(user_id))
         violations = check_non_negative_inventory(entries).count()
         rows = _rows(
             entries.orderBy("block_timestamp", "block_number", "log_index").select(
@@ -425,10 +428,8 @@ class ServeContext:
         from ..ledger.build import build_wallet_ledger
 
         wallet = f"0xw{user_id}"
-        entries = build_wallet_ledger(
-            domain._domain_events(self.spark, self.sf_dir)
-            .filter(F.col("wallet") == wallet)
-        ).orderBy("block_timestamp", "block_number", "log_index")
+        entries = build_wallet_ledger(self._wallet_events(user_id)).orderBy(
+            "block_timestamp", "block_number", "log_index")
         rows = _rows(
             entries.select(
                 "event_type",
@@ -447,9 +448,7 @@ class ServeContext:
 
         wallet = f"0xw{user_id}"
         snaps = build_wallet_snapshots(
-            domain._domain_events(self.spark, self.sf_dir)
-            .filter(F.col("wallet") == wallet),
-            interval_s=interval_s,
+            self._wallet_events(user_id), interval_s=interval_s,
         ).orderBy("snapshot_epoch")
         rows = _rows(
             snaps.select(
@@ -465,10 +464,7 @@ class ServeContext:
         from ..ledger.build import build_wallet_ledger
 
         wallet = f"0xw{user_id}"
-        entries = build_wallet_ledger(
-            domain._domain_events(self.spark, self.sf_dir)
-            .filter(F.col("wallet") == wallet)
-        )
+        entries = build_wallet_ledger(self._wallet_events(user_id))
         signed = (
             F.when(F.col("event_type").isin("trade_buy", "transfer_in"),
                    F.col("quantity"))

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pandas as pd
 
 from neomarket_clickhouse_indexer_spark.ledger.build import (
-    _prepared,
+    WALLET_ORDER,
     _replay_wallet,
 )
 from neomarket_clickhouse_indexer_spark.ledger.engine import LedgerEngine
@@ -23,7 +23,8 @@ from .conftest import SF_SMOKE
 
 
 def test_fixture_impact_is_zero(spark):
-    pdf = _prepared(_domain_events(spark, SF_SMOKE, integer_splits=True)).toPandas()
+    pdf = (_domain_events(spark, SF_SMOKE, integer_splits=True)
+           .orderBy("wallet", *WALLET_ORDER).toPandas())
     n_diff = n_ti = 0
     for wallet, g in pdf.groupby("wallet", sort=False):
         a = _replay_wallet(wallet, g, None, ref_basis_memory=False)

@@ -10,6 +10,9 @@ so each served envelope must equal the gate's oracle SQL row for row:
 - ``/discover/markets`` vs ``MARKET_OVERVIEW_SQL``
 - ``/market/stats`` vs inline DuckDB SQL over the events from 24h before
   ``domain.FIXED_NOW`` on
+- ``/snapshots/:wallet`` and ``/positions/:wallet`` vs an in-process
+  ``LedgerEngine`` replay of the wallet's raw rows, mapped to domain events
+  here in Python, independently of the Spark mapping in ``domain.py``
 
 Values must match exactly (both sides ROUND(4) exact-decimal sums), as the
 registry's differential gates demand.
@@ -17,11 +20,16 @@ registry's differential gates demand.
 
 from __future__ import annotations
 
+import json
+from decimal import ROUND_HALF_UP, Decimal
+
 import duckdb
+import pandas as pd
 import pytest
 
 from neomarket_clickhouse_indexer_spark.determinism import EVENTS_SQL
 from neomarket_clickhouse_indexer_spark.domain import FIXED_NOW
+from neomarket_clickhouse_indexer_spark.ledger.engine import LedgerEngine
 from neomarket_clickhouse_indexer_spark.queries.events import (
     CATEGORY_LEADERBOARD_SQL,
     FIFO_PNL_MODES_UNREALIZED_SQL,
@@ -144,3 +152,93 @@ def test_market_stats_match_oracle(ctx, con):
     want.append({"key": "no-such-market", "trades24h": 0, "volume24h": 0.0,
                  "uniqueUsers24h": 0, "lastPrice": None})
     _assert_rows_equal([ctx.market_stats(r["key"]) for r in want], want)
+
+
+# --- per-wallet endpoints vs an in-process replay ---------------------
+
+# every one of these wallets has splits (signup rows) and transfers (view
+# rows) in the fixture, which _replay asserts; all but user 0 end with an
+# open position (user 13 with a fractional one)
+WALLET_USERS = (0, 9, 10, 11, 13)
+
+
+def _replay_input(con, user_id: int) -> list[dict]:
+    """One user's raw rows -> the ledger engine's domain events (purchase /
+    click -> trade, signup -> split, view -> transfer, anything else ->
+    fee_refund; tokens and amounts derived from ``props.k``)."""
+    raw = con.execute(
+        f"SELECT * FROM {EVENTS_SQL} e WHERE user_id = {user_id}").df()
+    out = []
+    for r in raw.itertuples(index=False):
+        k = json.loads(r.props).get("k")
+        if k is None:
+            continue
+        u = int(r.user_id)
+        yes, no = f"tok-yes-{u % 10}", f"tok-no-{u % 10}"
+        typ = {"purchase": "trade", "click": "trade", "signup": "split",
+               "view": "transfer"}.get(r.event_type, "fee_refund")
+        qty = float(k % 5 + 1) if typ in ("trade", "transfer") else 0.0
+        usdc = {"trade": r.value / 100.0, "split": r.value / 10.0,
+                "fee_refund": r.value / 1000.0}.get(typ, 0.0)
+        out.append({
+            "ts": pd.Timestamp(r.ts), "block_number": int(r.event_id),
+            "log_index": 0, "type": typ,
+            "token_id": yes if typ in ("trade", "transfer") else "",
+            "condition_id": f"c{u % 10}", "qty": qty, "usdc": usdc,
+            "fee": 0.0, "is_buy": r.event_type == "purchase",
+            "is_in": k % 2 == 0,
+            "outcome_token_ids": [yes, no] if typ == "split" else [],
+            "payout_ratios": [],
+        })
+    return out
+
+
+def _replay(con, user_id: int, snapshot_interval_s: int | None = None
+            ) -> LedgerEngine:
+    events = _replay_input(con, user_id)
+    types = {e["type"] for e in events}
+    assert {"split", "transfer"} <= types, (user_id, types)
+    eng = LedgerEngine(f"0xw{user_id}", snapshot_interval_s=snapshot_interval_s)
+    eng.replay(events)
+    return eng
+
+
+@pytest.mark.parametrize("user_id", WALLET_USERS)
+def test_snapshots_match_replay(ctx, con, user_id):
+    eng = _replay(con, user_id, snapshot_interval_s=86400)
+    want = [{"time": int(s["snapshot_epoch"]),
+             **{c: s[c] for c in ("realized_pnl", "unrealized_pnl",
+                                  "cashflow", "token_count")}}
+            for s in eng.snapshots]
+    assert want, "the wallet should span more than one snapshot interval"
+    got = ctx.snapshots(user_id, interval_s=86400)
+    assert got["wallet"] == f"0xw{user_id}"
+    _assert_rows_equal(got["snapshots"], want)
+
+
+def _dec(x: float, places: int) -> Decimal:
+    """Spark's double -> DECIMAL cast: the shortest repr, rounded half up."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+
+
+SIGN = {"trade_buy": 1, "transfer_in": 1, "trade_sell": -1,
+        "transfer_out": -1, "resolution_loss": -1}
+
+
+@pytest.mark.parametrize("user_id", WALLET_USERS)
+def test_positions_match_replay(ctx, con, user_id):
+    sums: dict[str, Decimal] = {}
+    for e in _replay(con, user_id).entries:
+        if e["token_id"] != "":
+            sums[e["token_id"]] = (sums.get(e["token_id"], Decimal(0))
+                                   + SIGN.get(e["event_type"], 0)
+                                   * _dec(e["quantity"], 10))
+    want = [{"token_id": t, "qty": float(q.quantize(Decimal("1e-6"),
+                                                     ROUND_HALF_UP))}
+            for t, q in sums.items()]
+    want = sorted((w for w in want if w["qty"] > 1e-9),
+                  key=lambda w: (-w["qty"], w["token_id"]))
+    assert bool(want) == (user_id != 0)
+    got = ctx.positions(user_id)
+    assert got["wallet"] == f"0xw{user_id}"
+    _assert_rows_equal(got["positions"], want)
