@@ -74,22 +74,23 @@ def top_users_by_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fifo_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events")
     # extract the JSON field once behind a projection boundary — the filter
-    # and qty derivation both reuse the parsed column
-    parsed = ev.filter(F.col("event_type").isin("purchase", "click")).select(
+    # and qty derivation both reuse the parsed column. SQL projections, as
+    # in _domain_events: a one-wallet /pnl read builds this plan per request
+    parsed = ev.filter("event_type IN ('purchase', 'click')").selectExpr(
         "user_id",
         "ts",
         "event_id",
         "event_type",
         "value",
-        F.get_json_object(F.col("props"), "$.k").cast("int").alias("k"),
+        "CAST(get_json_object(props, '$.k') AS INT) AS k",
     )
-    return parsed.filter(F.col("k").isNotNull()).select(
-        F.col("user_id").alias("key"),
+    return parsed.filter("k IS NOT NULL").selectExpr(
+        "user_id AS key",
         "ts",
-        F.col("event_id").alias("ord"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(-1).alias("side"),
-        ((F.col("k") % 5) + 1).alias("qty"),
-        F.col("value").alias("price"),
+        "event_id AS ord",
+        "CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END AS side",
+        "(k % 5) + 1 AS qty",
+        "value AS price",
     )
 
 
@@ -103,75 +104,81 @@ def fifo_user_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _domain_events(
-    spark: SparkSession, sf_dir: str, integer_splits: bool = False
+    spark: SparkSession, sf_dir: str, integer_splits: bool = False,
+    user_id: int | None = None,
 ) -> DataFrame:
-    # rows with null props.k would yield null qty/usdc and silently poison
-    # wallet books (ADVICE r1) — exclude them, mirroring _fifo_input
-    #
-    # integer_splits: split amounts become (k % 3) + 1 instead of value/10 —
-    # the snapshot gate's integer-quantity domain, where every lot qty stays
-    # an exactly-representable integer so clamped inventory replay is
-    # bit-exact under ANY association order (see wallet_snapshot_positions).
-    ev = tables.load_table(spark, sf_dir, "events").filter(
-        F.get_json_object(F.col("props"), "$.k").isNotNull()
-    )
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    wallet = F.concat(F.lit("0xw"), F.col("user_id").cast("string"))
-    cond = F.concat(F.lit("c"), (F.col("user_id") % 10).cast("string"))
-    yes = F.concat(F.lit("tok-yes-"), (F.col("user_id") % 10).cast("string"))
-    no = F.concat(F.lit("tok-no-"), (F.col("user_id") % 10).cast("string"))
-    legs = F.array(yes, no)
-    qty = ((k % 5) + 1).cast("double")
-    base = ev.select(
-        wallet.alias("wallet"),
-        F.col("ts"),
-        F.col("event_id").alias("block_number"),
-        F.lit(0).cast("long").alias("log_index"),
-        F.col("event_type"),
-        F.col("value"),
-        k.alias("k"),
-        qty.alias("qd"),
-        cond.alias("condition_id"),
-        yes.alias("yes"),
-        no.alias("no"),
-        legs.alias("legs"),
+    """The ledger's domain events (ledger/prep.py schema) of every wallet,
+    or of ``user_id``'s wallet only.
+
+    ``user_id`` filters the raw rows before the mapping, so the parquet
+    scan pushes ``user_id = u`` down and only that wallet's props are
+    JSON-parsed (a filter on the derived ``wallet`` cannot be pushed).
+
+    Rows with a null ``props.k`` would yield null qty/usdc and silently
+    poison wallet books (ADVICE r1); they are excluded, mirroring
+    ``_fifo_input``.
+
+    ``integer_splits``: split amounts become (k % 3) + 1 instead of
+    value/10 — the snapshot gate's integer-quantity domain, where every lot
+    qty stays an exactly-representable integer so clamped inventory replay
+    is bit-exact under ANY association order (see
+    wallet_snapshot_positions).
+
+    The mapping is two SQL projections: one ``selectExpr`` costs a handful
+    of py4j calls, where the same plan built from Column calls costs about
+    1,200, which dominated a one-wallet read.
+    """
+    ev = tables.load_table(spark, sf_dir, "events")
+    if user_id is not None:
+        ev = ev.filter(F.col("user_id") == user_id)
+    k = "CAST(get_json_object(props, '$.k') AS INT)"
+    market = "CAST(user_id % 10 AS STRING)"
+    base = ev.filter("get_json_object(props, '$.k') IS NOT NULL").selectExpr(
+        "concat('0xw', CAST(user_id AS STRING)) AS wallet",
+        "ts",
+        "event_id AS block_number",
+        "CAST(0 AS BIGINT) AS log_index",
+        "event_type",
+        "value",
+        f"{k} AS k",
+        f"CAST(({k} % 5) + 1 AS DOUBLE) AS qd",
+        f"concat('c', {market}) AS condition_id",
+        f"concat('tok-yes-', {market}) AS yes",
+        f"array(concat('tok-yes-', {market}), concat('tok-no-', {market}))"
+        " AS legs",
     )
     typ = (
-        F.when(F.col("event_type") == "purchase", F.lit("trade"))
-        .when(F.col("event_type") == "click", F.lit("trade"))
-        .when(F.col("event_type") == "signup", F.lit("split"))
-        .when(F.col("event_type") == "view", F.lit("transfer"))
-        .otherwise(F.lit("fee_refund"))
+        "CASE WHEN event_type = 'purchase' THEN 'trade'"
+        " WHEN event_type = 'click' THEN 'trade'"
+        " WHEN event_type = 'signup' THEN 'split'"
+        " WHEN event_type = 'view' THEN 'transfer'"
+        " ELSE 'fee_refund' END"
     )
-    return base.select(
+    split_usdc = ("CAST((k % 3) + 1 AS DOUBLE)" if integer_splits
+                  else "value / 10.0D")
+    return base.selectExpr(
         "wallet",
         "ts",
         "block_number",
         "log_index",
-        typ.alias("type"),
-        F.when(typ == "transfer", F.col("yes")).otherwise(
-            F.when(typ == "trade", F.col("yes")).otherwise(F.lit(""))
-        ).alias("token_id"),
-        F.col("condition_id"),
-        F.when(typ.isin("trade", "transfer"), F.col("qd")).otherwise(F.lit(0.0)).alias("qty"),
-        F.when(typ == "trade", F.col("value") / 100.0)
-        .when(
-            typ == "split",
-            ((F.col("k") % 3) + 1).cast("double")
-            if integer_splits
-            else F.col("value") / 10.0,
-        )
-        .when(typ == "fee_refund", F.col("value") / 1000.0)
-        .otherwise(F.lit(0.0))
-        .alias("usdc"),
-        F.lit(0.0).alias("fee"),
-        (F.col("event_type") == "purchase").alias("is_buy"),
-        ((F.col("k") % 2) == 0).alias("is_in"),
-        F.when(typ == "split", F.col("legs")).otherwise(
-            F.lit(None).cast("array<string>")
-        ).alias("outcome_token_ids"),
-        F.lit(None).cast("array<double>").alias("payout_ratios"),
-        F.lit(None).cast("array<string>").alias("mint_token_ids"),
+        f"{typ} AS type",
+        f"CASE WHEN {typ} = 'transfer' THEN yes"
+        f" ELSE CASE WHEN {typ} = 'trade' THEN yes ELSE '' END END"
+        " AS token_id",
+        "condition_id",
+        f"CASE WHEN {typ} IN ('trade', 'transfer') THEN qd ELSE 0.0D END"
+        " AS qty",
+        f"CASE WHEN {typ} = 'trade' THEN value / 100.0D"
+        f" WHEN {typ} = 'split' THEN {split_usdc}"
+        f" WHEN {typ} = 'fee_refund' THEN value / 1000.0D"
+        " ELSE 0.0D END AS usdc",
+        "0.0D AS fee",
+        "event_type = 'purchase' AS is_buy",
+        "(k % 2) = 0 AS is_in",
+        f"CASE WHEN {typ} = 'split' THEN legs"
+        " ELSE CAST(NULL AS ARRAY<STRING>) END AS outcome_token_ids",
+        "CAST(NULL AS ARRAY<DOUBLE>) AS payout_ratios",
+        "CAST(NULL AS ARRAY<STRING>) AS mint_token_ids",
     )
 
 

@@ -42,9 +42,13 @@ REALIZED_SCHEMA = (
 )
 
 
-def _replay_wallet(wallet: str, g: pd.DataFrame,
-                   snapshot_interval_s: int | None,
-                   ref_basis_memory: bool = False) -> LedgerEngine:
+def replay_wallet(wallet: str, g: pd.DataFrame,
+                  snapshot_interval_s: int | None,
+                  ref_basis_memory: bool = False) -> LedgerEngine:
+    """Replay one wallet's domain events ``g`` (ledger/prep.py columns,
+    ``ts`` as pandas Timestamps) through a fresh :class:`LedgerEngine`.
+    The builders below call it once per wallet inside ``mapInPandas``; the
+    serving layer calls it on the driver for a one-wallet read."""
     eng = LedgerEngine(wallet, snapshot_interval_s=snapshot_interval_s,
                        ref_basis_memory=ref_basis_memory)
     events = []
@@ -82,7 +86,7 @@ def _runner(kind: str, snapshot_interval_s: int | None):
     def run(pdf: pd.DataFrame) -> pd.DataFrame | None:
         outs = []
         for wallet, g in pdf.groupby("wallet", sort=False):
-            eng = _replay_wallet(wallet, g, snapshot_interval_s)
+            eng = replay_wallet(wallet, g, snapshot_interval_s)
             if kind == "entries":
                 recs = eng.entries
             elif kind == "snapshots":
@@ -135,7 +139,7 @@ def build_pnl_marks(
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for wallet, g in pdf.groupby("wallet", sort=False):
-            eng = _replay_wallet(wallet, g, None)
+            eng = replay_wallet(wallet, g, None)
             unreal, cost, value = eng.open_positions_report(e_start, e_end)
             rows.append((wallet, unreal, cost, value))
         return pd.DataFrame(

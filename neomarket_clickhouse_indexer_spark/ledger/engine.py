@@ -125,6 +125,10 @@ class LedgerEngine:
 
     def __init__(self, wallet: str, snapshot_interval_s: int | None = None,
                  ref_basis_memory: bool = False):
+        if snapshot_interval_s is not None and snapshot_interval_s <= 0:
+            # a non-positive cadence never reaches the next boundary
+            raise ValueError(
+                f"snapshot_interval_s must be > 0, got {snapshot_interval_s}")
         self.wallet = wallet
         self.book = PositionBook()
         self.realized = 0.0

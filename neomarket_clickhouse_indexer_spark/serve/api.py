@@ -17,10 +17,18 @@ them from pre-aggregated ClickHouse tables: ``user_stats``,
 ``market_stats`` and ``discover`` each read a driver-resident table that
 Spark computes once per context and per version of the events source (its
 ``(mtime_ns, size)``), then answer by key lookup and slice — no Spark job
-per request. The per-wallet endpoints, ``activity``, ``recent_trades``,
-``holders`` and ``leaderboard(sort="pnl")`` still run Spark per request:
-they page or recompute one wallet's raw history, and the wallet ones are
-the raw-recompute path the ledger benchmark measures.
+per request.
+
+The per-wallet endpoints — ``ledger``, ``snapshots``, ``positions``,
+``explain_user`` and ``pnl`` — recompute one wallet from raw events on
+every request, as the reference reads one wallet's ledger with a query
+filtered on its key: one Spark job scans the events with ``user_id = u``
+pushed down to parquet and collects that wallet's rows, then the ledger
+engine (or the FIFO fold, for ``pnl``) replays them on the driver. No
+shuffle, no Python worker, and nothing kept between requests.
+``activity`` and ``recent_trades`` page one user's raw rows in one job;
+``holders`` and ``leaderboard(sort="pnl")`` run the whole-table FIFO
+allocation per request.
 
 The context takes the *generic* event-stream tables (driver testdata) or
 domain-normalized frames; endpoints are thin — all heavy lifting lives in
@@ -31,8 +39,11 @@ is a 30-line adapter. Nothing here imports the ``queries`` gate registry.
 from __future__ import annotations
 
 import threading
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Any, Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +74,35 @@ def _keyed(df: DataFrame, key: str) -> dict[Any, list[dict[str, Any]]]:
 def _copies(rows: list[dict[str, Any]], limit: int) -> list[dict[str, Any]]:
     """The first ``limit`` rows of a shared answer table, as fresh dicts."""
     return [r.copy() for r in rows[:limit]]
+
+
+def _collect(df: DataFrame) -> pd.DataFrame:
+    """``df`` collected into pandas in one job, with ``ts`` as naive
+    Timestamps of its session-zone wall time — what ``mapInPandas`` hands
+    the ledger and FIFO code. ``ts`` is cast to TIMESTAMP_NTZ first: a
+    collected TIMESTAMP comes back in the Python process's local zone."""
+    df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    out = pd.DataFrame(_rows(df), columns=df.columns)
+    out["ts"] = pd.to_datetime(out["ts"])
+    return out
+
+
+def _entry_rows(entries: list[dict], fields: tuple[str, ...],
+                limit: int) -> list[dict[str, Any]]:
+    """The first ``limit`` ledger entries in (block_timestamp,
+    block_number, log_index) order, as ``event_type``, ``time`` (epoch
+    seconds) and ``fields``."""
+    entries = sorted(entries, key=lambda e: (
+        e["block_timestamp"], e["block_number"], e["log_index"]))
+    return [{"event_type": e["event_type"],
+             "time": e["block_timestamp"].value // 1_000_000_000,
+             **{f: e[f] for f in fields}} for e in entries[:limit]]
+
+
+def _dec10(x: float) -> Decimal:
+    """Spark's double -> DECIMAL(30,10) cast: the double's shortest
+    decimal form, rounded half up to 10 places."""
+    return Decimal(repr(x)).quantize(Decimal("1e-10"), ROUND_HALF_UP)
 
 
 class ServeContext:
@@ -136,9 +176,18 @@ class ServeContext:
 
     def _wallet_events(self, user_id: int) -> DataFrame:
         """The domain events of one user's wallet, the input of every
-        per-wallet endpoint."""
-        return domain._domain_events(self.spark, self.sf_dir).filter(
-            F.col("wallet") == f"0xw{user_id}")
+        per-wallet endpoint; the scan reads that user's rows only."""
+        return domain._domain_events(self.spark, self.sf_dir, user_id=user_id)
+
+    def _replay(self, user_id: int, snapshot_interval_s: int | None = None):
+        """One user's wallet replayed on the driver: one Spark job collects
+        its domain events, then the ledger engine runs in process (a wallet
+        is tens of events, a few ms). Nothing is kept between requests."""
+        from ..ledger.build import replay_wallet
+
+        return replay_wallet(f"0xw{user_id}",
+                             _collect(self._wallet_events(user_id)),
+                             snapshot_interval_s)
 
     # /leaderboard (src/api.ts:1322-1473); category= routes to the filtered
     # raw-join plan (queryLeaderboardFromRawFiltered, src/api.ts:597-635)
@@ -295,20 +344,24 @@ class ServeContext:
         default mode 4 = total). Modes 1-2 are realized-only filters;
         modes 3-4 add the open-lot unrealized mark at the period end."""
         from ..ledger.pnl import _canonical_mode
-        from ..operators.fifo import fifo_unrealized_modes
+        from ..operators.fifo import PNL_UNREALIZED_SCHEMA, _per_key, _unreal_fold
 
         mode = _canonical_mode(mode)
         start = start or "1970-01-01 00:00:00"
         end = end or domain.FIXED_NOW
-        base = domain._fifo_input(self.spark, self.sf_dir).filter(
-            F.col("key") == user_id
-        )
-        df = fifo_unrealized_modes(base, start, end)
-        rows = _rows(df, 1)
-        if not rows:
+        # fifo_unrealized_modes' input and fold for one key, run on the
+        # driver over the key's rows in (ts, ord) order
+        rows = _collect(domain._fifo_input(self.spark, self.sf_dir).filter(
+            (F.col("key") == user_id)
+            & (F.col("ts") < F.lit(end).cast("timestamp"))
+        )).sort_values(["ts", "ord"], kind="stable")
+        if rows.empty:
             return {"userId": user_id, "mode": mode, "realizedPnl": 0.0,
                     "unrealizedPnl": 0.0, "totalPnl": 0.0}
-        r = rows[0]
+        start64, end64 = np.datetime64(start), np.datetime64(end)
+        fold = _per_key(lambda *c: _unreal_fold(*c, start64, end64),
+                        PNL_UNREALIZED_SCHEMA)
+        r = fold(rows).to_dict("records")[0]
         realized = (r["realized_period_only"]
                     if mode in ("period_only", "period_plus_unrealized")
                     else r["realized_with_history"])
@@ -328,26 +381,15 @@ class ServeContext:
     # /leaderboard/explain (src/api.ts:1560-1667): per-wallet ledger entries
     # + the never-negative-inventory invariant verdict (O7)
     def explain_user(self, user_id: int, limit: int = 10000) -> dict:
-        from ..ledger.build import build_wallet_ledger
-        from ..verify.invariants import check_non_negative_inventory
+        from ..verify.invariants import inventory_violations
 
-        wallet = f"0xw{user_id}"
-        entries = build_wallet_ledger(self._wallet_events(user_id))
-        violations = check_non_negative_inventory(entries).count()
-        rows = _rows(
-            entries.orderBy("block_timestamp", "block_number", "log_index").select(
-                "event_type",
-                F.unix_timestamp("block_timestamp").alias("time"),
-                "token_id",
-                "quantity",
-                "usdc_delta",
-                "realized_pnl",
-            ),
-            min(limit, 10000),
-        )
+        entries = self._replay(user_id).entries
+        violations = len(inventory_violations(entries))
         return {
-            "wallet": wallet,
-            "entries": rows,
+            "wallet": f"0xw{user_id}",
+            "entries": _entry_rows(
+                entries, ("token_id", "quantity", "usdc_delta", "realized_pnl"),
+                max(1, min(limit, 10000))),
             "invariants": {
                 "never_negative_inventory": violations == 0,
                 "violations": violations,
@@ -425,66 +467,42 @@ class ServeContext:
 
     # /ledger (src/api.ts ledger rows, clamp ≤10000, keyset order)
     def ledger(self, user_id: int, limit: int = 10000) -> dict:
-        from ..ledger.build import build_wallet_ledger
-
-        wallet = f"0xw{user_id}"
-        entries = build_wallet_ledger(self._wallet_events(user_id)).orderBy(
-            "block_timestamp", "block_number", "log_index")
-        rows = _rows(
-            entries.select(
-                "event_type",
-                F.unix_timestamp("block_timestamp").alias("time"),
-                "token_id", "quantity", "usdc_delta", "unit_price",
-                "cost_basis", "realized_pnl",
-            ),
-            max(1, min(limit, 10000)),
-        )
-        return {"wallet": wallet, "ledger": rows}
+        rows = _entry_rows(
+            self._replay(user_id).entries,
+            ("token_id", "quantity", "usdc_delta", "unit_price", "cost_basis",
+             "realized_pnl"),
+            max(1, min(limit, 10000)))
+        return {"wallet": f"0xw{user_id}", "ledger": rows}
 
     # /snapshots (src/api.ts snapshots, clamp ≤10000)
     def snapshots(self, user_id: int, interval_s: int = 86400,
                   limit: int = 10000) -> dict:
-        from ..ledger.build import build_wallet_snapshots
-
-        wallet = f"0xw{user_id}"
-        snaps = build_wallet_snapshots(
-            self._wallet_events(user_id), interval_s=interval_s,
-        ).orderBy("snapshot_epoch")
-        rows = _rows(
-            snaps.select(
-                F.col("snapshot_epoch").cast("long").alias("time"),
-                "realized_pnl", "unrealized_pnl", "cashflow", "token_count",
-            ),
-            max(1, min(limit, 10000)),
-        )
-        return {"wallet": wallet, "snapshots": rows}
+        if interval_s <= 0:
+            raise ValueError(f"interval_s must be > 0, got {interval_s}")
+        snaps = sorted(self._replay(user_id, interval_s).snapshots,
+                       key=lambda s: s["snapshot_epoch"])
+        rows = [{"time": int(s["snapshot_epoch"]),
+                 **{f: s[f] for f in ("realized_pnl", "unrealized_pnl",
+                                      "cashflow", "token_count")}}
+                for s in snaps[:max(1, min(limit, 10000))]]
+        return {"wallet": f"0xw{user_id}", "snapshots": rows}
 
     # /positions (src/api.ts positions from balances + enrichment)
     def positions(self, user_id: int) -> dict:
-        from ..ledger.build import build_wallet_ledger
+        from ..verify.invariants import signed_quantity
 
-        wallet = f"0xw{user_id}"
-        entries = build_wallet_ledger(self._wallet_events(user_id))
-        signed = (
-            F.when(F.col("event_type").isin("trade_buy", "transfer_in"),
-                   F.col("quantity"))
-            .when(F.col("event_type").isin(
-                "trade_sell", "transfer_out", "resolution_loss"),
-                -F.col("quantity"))
-            .otherwise(F.lit(0.0))
-        )
-        pos = (
-            entries.filter(F.col("token_id") != "")
-            .groupBy("token_id")
-            # exact decimal accumulator (dsum pattern): a bare double sum is
-            # partition-order-dependent and can flip the qty>1e-9 filter at
-            # the 6th decimal across runs (ADVICE r1)
-            .agg(
-                F.round(F.sum(signed.cast("decimal(30,10)")), 6)
-                .cast("double")
-                .alias("qty")
-            )
-            .filter(F.col("qty") > 1e-9)
-            .orderBy(F.desc("qty"), F.asc("token_id"))
-        )
-        return {"wallet": wallet, "positions": _rows(pos, 1000)}
+        # the signed quantity per token as an exact decimal sum (dsum
+        # pattern): each quantity cast to DECIMAL(30,10), the sum rounded
+        # half up to 6 places — a bare double sum is order-dependent and
+        # can flip the qty > 1e-9 filter at the 6th decimal (ADVICE r1)
+        sums: dict[str, Decimal] = {}
+        for e in self._replay(user_id).entries:
+            if e["token_id"] != "":
+                sums[e["token_id"]] = (sums.get(e["token_id"], 0)
+                                       + _dec10(signed_quantity(e)))
+        pos = [{"token_id": t,
+                "qty": float(q.quantize(Decimal("1e-6"), ROUND_HALF_UP))}
+               for t, q in sums.items()]
+        pos = sorted((p for p in pos if p["qty"] > 1e-9),
+                     key=lambda p: (-p["qty"], p["token_id"]))
+        return {"wallet": f"0xw{user_id}", "positions": pos[:1000]}

@@ -44,6 +44,36 @@ def check_non_negative_inventory(
     )
 
 
+def signed_quantity(entry: dict) -> float:
+    """A ledger entry's inventory change: the ``signed`` column of
+    :func:`check_non_negative_inventory` for one ``LedgerEngine`` entry."""
+    if entry["event_type"] in ("trade_buy", "transfer_in"):
+        return entry["quantity"]
+    if entry["event_type"] in ("trade_sell", "transfer_out", "resolution_loss"):
+        return -entry["quantity"]
+    return 0.0
+
+
+def inventory_violations(entries: list[dict], eps: float = 1e-6
+                         ) -> list[dict]:
+    """:func:`check_non_negative_inventory` over one replay's ledger entries
+    (``LedgerEngine.entries``) in process: the same running double sums in
+    the same order, so the same ``(wallet, token_id, min_running_qty)``
+    rows, without a Spark job."""
+    order = sorted(entries, key=lambda e: (
+        e["block_timestamp"], e["block_number"], e["log_index"]))
+    running: dict[tuple, list[float]] = {}  # (wallet, token) -> [sum, min]
+    for e in order:
+        if e["token_id"] == "":
+            continue
+        acc = running.setdefault((e["wallet"], e["token_id"]),
+                                 [0.0, float("inf")])
+        acc[0] += signed_quantity(e)
+        acc[1] = min(acc[1], acc[0])
+    return [{"wallet": w, "token_id": t, "min_running_qty": m}
+            for (w, t), (_, m) in running.items() if m < -eps]
+
+
 def reconcile_balances(
     ledger_open: DataFrame, external: DataFrame, tolerance: float = 1e-4
 ) -> DataFrame:

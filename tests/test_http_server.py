@@ -96,3 +96,21 @@ def test_activity_limit_is_clamped(base, spark):
     assert len(out["events"]) == 1
     _, out = _get(base, f"/activity?user_id=12&limit={10**9}")
     assert len(out["events"]) == min(200, n)
+    # /leaderboard/explain clamps to [1, 10000] like /ledger
+    _, full = _get(base, f"/leaderboard/explain?user_id=12&limit={10**9}")
+    assert len(full["entries"]) > 1
+    for limit in (-1, 0):
+        status, out = _get(base, f"/leaderboard/explain?user_id=12&limit={limit}")
+        assert status == 200 and out["entries"] == full["entries"][:1]
+
+
+@pytest.mark.parametrize("interval_s", [-86400, 0])
+def test_non_positive_snapshot_interval_is_400(base, interval_s):
+    # a negative interval used to loop forever in the snapshot emitter and
+    # 0 divided by zero; the short client timeout catches a hang
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        with urllib.request.urlopen(
+                f"{base}/snapshots/12?interval_s={interval_s}", timeout=60):
+            pass
+    assert ei.value.code == 400
+    assert "interval_s" in json.loads(ei.value.read())["error"]

@@ -14,7 +14,7 @@ import pandas as pd
 
 from neomarket_clickhouse_indexer_spark.ledger.build import (
     WALLET_ORDER,
-    _replay_wallet,
+    replay_wallet,
 )
 from neomarket_clickhouse_indexer_spark.ledger.engine import LedgerEngine
 from neomarket_clickhouse_indexer_spark.queries.events import _domain_events
@@ -27,8 +27,8 @@ def test_fixture_impact_is_zero(spark):
            .orderBy("wallet", *WALLET_ORDER).toPandas())
     n_diff = n_ti = 0
     for wallet, g in pdf.groupby("wallet", sort=False):
-        a = _replay_wallet(wallet, g, None, ref_basis_memory=False)
-        b = _replay_wallet(wallet, g, None, ref_basis_memory=True)
+        a = replay_wallet(wallet, g, None, ref_basis_memory=False)
+        b = replay_wallet(wallet, g, None, ref_basis_memory=True)
         assert len(a.entries) == len(b.entries)
         for ea, eb in zip(a.entries, b.entries):
             n_ti += ea["event_type"] == "transfer_in"

@@ -208,6 +208,14 @@ def test_snapshots_cumulative_consistency():
     assert eng.snapshots[-1]["token_count"] == 0
 
 
+@pytest.mark.parametrize("interval_s", [0, -60])
+def test_non_positive_snapshot_interval_is_rejected(interval_s):
+    # 0 divided by zero at the first event; a negative interval never
+    # reached its next boundary and looped without end
+    with pytest.raises(ValueError, match="snapshot_interval_s"):
+        LedgerEngine("w1", snapshot_interval_s=interval_s)
+
+
 def test_adapter_split_merge_labels():
     """Adapter variants share split/merge semantics but keep their own
     event-type labels (ledger-engine.ts:1463-1669)."""
