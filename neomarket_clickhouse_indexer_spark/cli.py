@@ -18,29 +18,17 @@ the reference gets from a worker pool comes free from partitioning here —
 backfill-ledger and build-ledger are the same distributed job with a
 different wallet filter.
 
-Every command supports --dry-run: compute and print row counts, write
-nothing (reference build-ledger.ts:51,58-61).
+Every command supports --dry-run: compute and print counts, write nothing
+(reference build-ledger.ts:51,58-61). The job bodies live in
+``ledger/jobs.py``; this module parses arguments, calls one job and prints
+its count.
 """
 
 from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import functions as F
-
 from .domain import _domain_events
-
-
-def _write_or_count(df, out: str | None, partition_by: list[str],
-                    dry_run: bool) -> int:
-    n = df.count()
-    if not dry_run:
-        if out is None:
-            raise SystemExit("--out is required unless --dry-run")
-        from .sources.sinks import replace_partitions
-
-        replace_partitions(df, out, partition_by)
-    return n
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -65,57 +53,29 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser("build-rollup-1d", help="wallet x condition x day rollup")
 
     args = p.parse_args(argv)
+    if args.out is None and not args.dry_run:
+        raise SystemExit("--out is required unless --dry-run")
 
+    from .ledger import jobs
     from .session import get_spark
 
-    spark = get_spark(f"cli-{args.cmd}")
-    ev = _domain_events(spark, args.sf_dir)
-
+    ev = _domain_events(get_spark(f"cli-{args.cmd}"), args.sf_dir)
+    out = None if args.dry_run else args.out
     if args.cmd == "build-ledger":
-        from .ledger.build import build_wallet_ledger
-
-        entries = build_wallet_ledger(ev.filter(F.col("wallet") == args.wallet))
-        n = _write_or_count(entries, args.out, ["wallet"], args.dry_run)
-        print(f"build-ledger {args.wallet}: {n} entries"
-              f"{' (dry run)' if args.dry_run else ''}")
+        n = jobs.rebuild_wallet_ledgers(ev, out, wallets=[args.wallet])
+        done = f"build-ledger {args.wallet}: {n} entries"
     elif args.cmd == "backfill-ledger":
-        from .ledger.build import build_wallet_ledger
-
-        n = _write_or_count(build_wallet_ledger(ev), args.out, ["wallet"],
-                            args.dry_run)
-        print(f"backfill-ledger: {n} entries"
-              f"{' (dry run)' if args.dry_run else ''}")
+        done = f"backfill-ledger: {jobs.rebuild_wallet_ledgers(ev, out)} entries"
     elif args.cmd == "snapshot-scheduler":
-        from .determinism import ranked_topk
-        from .ledger.build import build_wallet_snapshots
-
-        vol = ev.groupBy("wallet").agg(
-            F.sum(F.abs(F.col("usdc")).cast("decimal(30,10)")).alias("v")
-        )
-        top = ranked_topk(
-            vol, [F.desc("v"), F.asc("wallet")], args.wallet_limit
-        ).select("wallet")
-        snaps = build_wallet_snapshots(
-            ev.join(F.broadcast(top), "wallet"), interval_s=args.interval_s
-        )
-        n = _write_or_count(snaps, args.out, ["wallet"], args.dry_run)
-        print(f"snapshot-scheduler: {n} snapshots"
-              f"{' (dry run)' if args.dry_run else ''}")
+        n = jobs.snapshot_top_wallets(ev, out, n=args.wallet_limit,
+                                      interval_s=args.interval_s)
+        done = f"snapshot-scheduler: {n} wallets"
     elif args.cmd == "calculate-pnl":
-        from .ledger.pnl import pnl_by_mode
-
-        out_df = pnl_by_mode(ev, args.start, args.end, args.mode)
-        n = _write_or_count(out_df, args.out, ["wallet"], args.dry_run)
-        print(f"calculate-pnl [{args.mode}]: {n} wallets"
-              f"{' (dry run)' if args.dry_run else ''}")
-    elif args.cmd == "build-rollup-1d":
-        from .ledger.build import build_wallet_ledger
-        from .ledger.pnl import rollup_realized_1d
-
-        roll = rollup_realized_1d(build_wallet_ledger(ev))
-        n = _write_or_count(roll, args.out, ["day"], args.dry_run)
-        print(f"build-rollup-1d: {n} rows"
-              f"{' (dry run)' if args.dry_run else ''}")
+        n = jobs.calculate_pnl(ev, out, args.start, args.end, args.mode)
+        done = f"calculate-pnl [{args.mode}]: {n} wallets"
+    else:
+        done = f"build-rollup-1d: {jobs.rollup_1d(ev, out)} rows"
+    print(done + (" (dry run)" if args.dry_run else ""))
     return 0
 
 

@@ -11,6 +11,8 @@ machine inside (SURVEY §2.10 O1/O2).
 
 from __future__ import annotations
 
+from operator import attrgetter
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,20 +84,14 @@ def replay_wallet(wallet: str, g: pd.DataFrame,
     return eng
 
 
-def _runner(kind: str, snapshot_interval_s: int | None):
+def _per_wallet(emit, snapshot_interval_s: int | None = None):
+    """The per-partition body of every builder: replay each wallet of the
+    partition and concatenate the records ``emit(engine)`` returns for it
+    (dicts keyed by the builder's output columns)."""
     def run(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        outs = []
-        for wallet, g in pdf.groupby("wallet", sort=False):
-            eng = replay_wallet(wallet, g, snapshot_interval_s)
-            if kind == "entries":
-                recs = eng.entries
-            elif kind == "snapshots":
-                recs = eng.snapshots
-            else:
-                recs = eng.realized_events
-            if recs:
-                outs.append(pd.DataFrame(recs))
-        return pd.concat(outs, ignore_index=True) if outs else None
+        recs = [rec for wallet, g in pdf.groupby("wallet", sort=False)
+                for rec in emit(replay_wallet(wallet, g, snapshot_interval_s))]
+        return pd.DataFrame(recs) if recs else None
 
     return run
 
@@ -103,8 +99,8 @@ def _runner(kind: str, snapshot_interval_s: int | None):
 def build_wallet_ledger(events: DataFrame) -> DataFrame:
     """Normalized events (ledger/prep.py schema) → wallet_ledger entries
     (reference table 001:292-313)."""
-    return by_key(events, "wallet", WALLET_ORDER, _runner("entries", None),
-                  LEDGER_SCHEMA)
+    return by_key(events, "wallet", WALLET_ORDER,
+                  _per_wallet(attrgetter("entries")), LEDGER_SCHEMA)
 
 
 def build_wallet_snapshots(events: DataFrame, interval_s: int = 86400) -> DataFrame:
@@ -112,7 +108,8 @@ def build_wallet_snapshots(events: DataFrame, interval_s: int = 86400) -> DataFr
     wallet_pnl_snapshots 001:318-332; snapshot emitter
     ledger-engine.ts:1116-1152)."""
     return by_key(events, "wallet", WALLET_ORDER,
-                  _runner("snapshots", interval_s), SNAPSHOT_SCHEMA)
+                  _per_wallet(attrgetter("snapshots"), interval_s),
+                  SNAPSHOT_SCHEMA)
 
 
 MARKS_SCHEMA = (
@@ -136,26 +133,18 @@ def build_pnl_marks(
     e_start = pd.Timestamp(entry_start) if entry_start is not None else None
     e_end = pd.Timestamp(entry_end) if entry_end is not None else None
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for wallet, g in pdf.groupby("wallet", sort=False):
-            eng = replay_wallet(wallet, g, None)
-            unreal, cost, value = eng.open_positions_report(e_start, e_end)
-            rows.append((wallet, unreal, cost, value))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "wallet", "unrealized_pnl", "open_positions_cost",
-                "open_positions_value",
-            ],
-        )
+    def mark(eng: LedgerEngine) -> list[dict]:
+        unreal, cost, value = eng.open_positions_report(e_start, e_end)
+        return [{"wallet": eng.wallet, "unrealized_pnl": unreal,
+                 "open_positions_cost": cost, "open_positions_value": value}]
 
     truncated = events.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
-    return by_key(truncated, "wallet", WALLET_ORDER, run, MARKS_SCHEMA)
+    return by_key(truncated, "wallet", WALLET_ORDER, _per_wallet(mark),
+                  MARKS_SCHEMA)
 
 
 def build_realized_events(events: DataFrame) -> DataFrame:
     """Normalized events → per-slice realized PnL events (feeds the O3 PnL
     modes, ledger-engine.ts:1955-2055)."""
-    return by_key(events, "wallet", WALLET_ORDER, _runner("realized", None),
-                  REALIZED_SCHEMA)
+    return by_key(events, "wallet", WALLET_ORDER,
+                  _per_wallet(attrgetter("realized_events")), REALIZED_SCHEMA)

@@ -1,6 +1,1 @@
-from .asof import asof_join
-from .candles import ohlcv, rebucket
-from .dedup import dedupe_by_id, latest_by_key
-from .fifo import fifo_allocate
-
-__all__ = ["asof_join", "ohlcv", "rebucket", "dedupe_by_id", "latest_by_key", "fifo_allocate"]
+"""Distributed operators: candles, FIFO lot matching, as-of joins, dedup."""

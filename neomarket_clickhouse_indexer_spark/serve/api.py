@@ -54,6 +54,7 @@ from ..operators.candles import finalize, ohlcv, rebucket
 from ..sources import tables
 
 INTERVALS = {"1m": 60, "5m": 300, "1h": 3600, "1d": 86400, "1w": 604800}
+CANDLE_LAG_S = 3600  # how far the candle tier may lag the raw events
 
 
 def _rows(df: DataFrame, limit: int | None = None) -> list[dict[str, Any]]:
@@ -116,7 +117,7 @@ class ServeContext:
         # pre-aggregated candle tier (ladder step 1); None → recompute raw
         self.candle_state = candle_state
         # O2 snapshot tier (wallet_pnl_snapshots analog); None → built
-        # lazily ONCE from the domain ledger and cached on the context
+        # lazily per events-source version (``_snapshots``)
         self.snapshot_state = snapshot_state
         # answer tables: (table, argument) → (events source token, table)
         self._tables: dict[tuple, tuple] = {}
@@ -144,20 +145,21 @@ class ServeContext:
         return hit[1]
 
     def _snapshots(self) -> DataFrame:
-        if self.snapshot_state is None:
-            from ..ledger.build import build_wallet_snapshots
+        """The snapshot tier: the injected one, else one built from the
+        domain ledger per events-source version, like an answer table."""
+        if self.snapshot_state is not None:
+            return self.snapshot_state
+        from ..ledger.build import build_wallet_snapshots
 
-            # through the memo, so racing first reads build the tier once
-            self.snapshot_state = self._table("snapshot_tier", None, lambda: (
-                build_wallet_snapshots(
-                    domain._domain_events(self.spark, self.sf_dir,
-                                          integer_splits=True),
-                    interval_s=domain.SNAPSHOT_INTERVAL_S,
-                ).localCheckpoint(eager=True)))
-        return self.snapshot_state
+        return self._table("snapshot_tier", None, lambda: (
+            build_wallet_snapshots(
+                domain._domain_events(self.spark, self.sf_dir,
+                                      integer_splits=True),
+                interval_s=domain.SNAPSHOT_INTERVAL_S,
+            ).localCheckpoint(eager=True)))
 
-    def _candle_state_fresh(self, lag_seconds: int = 3600) -> bool:
-        """The tier is fresh if its max bucket is within ``lag_seconds`` of
+    def _candle_state_fresh(self) -> bool:
+        """The tier is fresh if its max bucket is within ``CANDLE_LAG_S`` of
         the raw data's max event time (checked once per events version)."""
         def check() -> bool:
             state_max = self.candle_state.agg(F.max("bucket")).collect()[0][0]
@@ -169,10 +171,10 @@ class ServeContext:
             return (
                 state_max is not None
                 and raw_max is not None
-                and (raw_max - state_max).total_seconds() <= lag_seconds
+                and (raw_max - state_max).total_seconds() <= CANDLE_LAG_S
             )
 
-        return self._table("candle_state_fresh", lag_seconds, check)
+        return self._table("candle_state_fresh", None, check)
 
     def _wallet_events(self, user_id: int) -> DataFrame:
         """The domain events of one user's wallet, the input of every
@@ -284,7 +286,7 @@ class ServeContext:
     # analog: argMax(open_positions_value / token_count / realized +
     # unrealized, snapshot_time) per requested bucket), never recomputed
     # from raw events. Mirrors the reference's prebuilt-table read; the
-    # tier is injected (snapshot_state) or built once per context.
+    # tier is injected (snapshot_state) or built once per events version.
     def portfolio_history(self, user_id: int, interval: str = "1d") -> dict:
         secs = INTERVALS[interval]
         table = self._table("portfolio_history", secs,

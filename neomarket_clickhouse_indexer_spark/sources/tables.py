@@ -67,7 +67,9 @@ def enable_normalized_tier(enabled: bool = True) -> None:
 # entry lives. Keyed on the source file's (mtime_ns, size) so a rewritten
 # fixture can never be served stale, and on the tier flag so the raw-path
 # differential gate and the bench tier never share an entry.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
+_TABLE_MEMO: dict[tuple, tuple[DataFrame, bool]] = {}
+# pinned on the session only by loads of a TIMESTAMP(NANOS) source
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def source_token(path: str) -> tuple:
@@ -82,10 +84,13 @@ def source_token(path: str) -> tuple:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table; normalizes the events table's timestamp encoding.
 
-    The events table's ``ts`` column has shipped in two parquet encodings:
+    A memo entry keeps the plan and whether its source needs
+    ``_NANOS_CONF``. The events table's ``ts`` column has shipped in two
+    parquet encodings:
 
     - INT64 TIMESTAMP(NANOS): Spark 4 rejects these by default; we read them
-      as raw longs (``spark.sql.legacy.parquet.nanosAsLong``) and convert to
+      as raw longs (``spark.sql.legacy.parquet.nanosAsLong``, set on the
+      session only for a source whose footer has such a column) and convert to
       microsecond timestamps with exact integer division (``ts div 1000`` —
       double division would lose precision at 1.7e18 ns). DuckDB truncates
       ns→µs the same way on CAST(ts AS TIMESTAMP).
@@ -98,21 +103,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     keeps event timestamps DateTime64, encoding-stable).
     """
     global _TIER_ENABLED
-    ts_cols = _TS_COLUMNS.get(name)
-    if ts_cols:
-        # pinned on every call, memo hits included: after a conf reset the
-        # session must still read int64-ns sources (schema inference of
-        # TIMESTAMP(NANOS) fails without it), as after a first resolution
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (
-        id(spark),
-        os.path.realpath(table_path(sf_dir, name)),
-        source_token(table_path(sf_dir, name)),
-        _TIER_ENABLED,
-    )
+    ts_cols = _TS_COLUMNS.get(name, [])
+    path = table_path(sf_dir, name)
+    key = (id(spark), os.path.realpath(path), source_token(path),
+           _TIER_ENABLED)
     hit = _TABLE_MEMO.get(key)
     if hit is not None:
-        return hit
+        if hit[1]:
+            # after a conf reset the memoized plan of an int64-ns source
+            # must still run, as must any fresh read of it in this session
+            spark.conf.set(_NANOS_CONF, "true")
+        return hit[0]
+    nanos = _has_nanos_column(path, ts_cols)
+    if nanos:  # schema inference of TIMESTAMP(NANOS) fails without it
+        spark.conf.set(_NANOS_CONF, "true")
     if _TIER_ENABLED:
         from ..plans.layout import normalized_table_layout
 
@@ -122,11 +126,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             tier = normalized_table_layout(spark, sf_dir, name)
         finally:
             _TIER_ENABLED = True
-        out = spark.read.parquet(tier)
-        _TABLE_MEMO[key] = out
-        return out
-    if ts_cols:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = spark.read.parquet(tier)
+    else:
+        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
@@ -136,13 +138,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # says the encoding drifted to epoch-millis/-seconds/-days
                 # (ADVICE r4): a silent misconvert here poisons every
                 # downstream date predicate.
-                _assert_ns_magnitude(table_path(sf_dir, name), c)
+                _assert_ns_magnitude(path, c)
                 df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        _TABLE_MEMO[key] = df
-        return df
-    out = spark.read.parquet(table_path(sf_dir, name))
-    _TABLE_MEMO[key] = out
-    return out
+    _TABLE_MEMO[key] = (df, nanos)
+    return df
+
+
+def _has_nanos_column(path: str, cols: list[str]) -> bool:
+    """Whether the parquet footer at ``path`` annotates one of ``cols`` as
+    TIMESTAMP(NANOS). A footer that cannot be read (a directory or glob
+    source) counts as yes, so such a source is read as before."""
+    if not cols:
+        return False
+    try:
+        import pyarrow.parquet as pq
+
+        md = pq.read_metadata(path)
+    except (OSError, ValueError):  # ValueError: pyarrow's ArrowInvalid
+        return True
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.name in cols and col.logical_type.type == "TIMESTAMP" and \
+                '"timeUnit": "nanoseconds"' in col.logical_type.to_json():
+            return True
+    return False
 
 
 # int64 nanoseconds for 1973-01-01 .. 2096-01-01 — any genuine ns epoch

@@ -1,3 +1,3 @@
-from .incremental import incremental_candles_stream, merge_candle_states
+from .incremental import incremental_candles_stream
 
-__all__ = ["incremental_candles_stream", "merge_candle_states"]
+__all__ = ["incremental_candles_stream"]

@@ -9,9 +9,9 @@ partial aggregate states that merge associatively at read/compact time.
 
 Spark mapping: the candle partial state (open/close carrying their order
 keys, min/max, exact-decimal volume, count) composes associatively —
-``merge_candle_states(old ∪ delta)`` is exactly ClickHouse's -State/-Merge
-contract. A ``foreachBatch`` sink folds each microbatch into a parquet
-state table:
+``rebucket(old ∪ delta)`` at the state's own grain is exactly
+ClickHouse's -State/-Merge contract. A ``foreachBatch`` sink folds each
+microbatch into a parquet state table:
 
   microbatch → ohlcv() partials → union with affected state partitions →
   merge → dynamic partition overwrite (only the dates the batch touched).
@@ -30,31 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.candles import ohlcv
-
-CANDLE_STATE_COLS = [
-    "key", "bucket", "open", "high", "low", "close",
-    "volume_dec", "trades", "first_ord", "last_ord", "bucket_date",
-]
-
-
-def merge_candle_states(states: DataFrame) -> DataFrame:
-    """Associatively merge candle partial states at the same (key, bucket)
-    grain — the -Merge half of the ClickHouse contract."""
-    return (
-        states.groupBy("key", "bucket")
-        .agg(
-            F.min_by("open", "first_ord").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "last_ord").alias("close"),
-            F.sum("volume_dec").alias("volume_dec"),
-            F.sum("trades").cast("long").alias("trades"),
-            F.min("first_ord").alias("first_ord"),
-            F.max("last_ord").alias("last_ord"),
-        )
-        .withColumn("bucket_date", F.to_date("bucket"))
-    )
+from ..operators.candles import ohlcv, rebucket
 
 
 def _fold(delta: DataFrame, state_dir: str, partition_col: str, merge,
@@ -110,8 +86,11 @@ def _fold_batch(
                   bucket_seconds=bucket_seconds).withColumn(
         "bucket_date", F.to_date("bucket")
     )
+    # a bucket that is already aligned re-buckets to itself, so merging
+    # partial states is a rebucket at the same grain
     _fold(delta, state_dir, "bucket_date",
-          lambda states: merge_candle_states(states).select(*CANDLE_STATE_COLS),
+          lambda states: rebucket(states, bucket_seconds).withColumn(
+              "bucket_date", F.to_date("bucket")),
           epoch)
 
 

@@ -96,11 +96,10 @@ def test_portfolio_history_snapshot_first(spark):
     for s in out["snapshots"]:
         assert s["timestamp"] % 86400 == 0
         assert set(s) == {"timestamp", "totalValue", "positions", "pnl"}
-    # the tier is cached on the context after the first call
-    assert ctx.snapshot_state is not None
-    state_before = ctx.snapshot_state
+    # the lazily built tier is reused while the events source is unchanged
+    tier = ctx._snapshots()
     ctx.portfolio_history(user_id=12, interval="1w")
-    assert ctx.snapshot_state is state_before
+    assert ctx._snapshots() is tier
 
 
 def test_portfolio_history_marks_match_snapshot_rows(spark):
@@ -109,7 +108,7 @@ def test_portfolio_history_marks_match_snapshot_rows(spark):
     out = ctx.portfolio_history(user_id=12, interval="1d")
     raw = {
         r["snapshot_epoch"]: r
-        for r in ctx.snapshot_state.filter("wallet = '0xw12'").collect()
+        for r in ctx._snapshots().filter("wallet = '0xw12'").collect()
     }
     for s in out["snapshots"]:
         in_bucket = [

@@ -86,11 +86,12 @@ def test_appended_events_rebuild_the_tables(spark, tmp_path):
     shutil.copy(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
     sf = str(tmp_path)
     ctx = ServeContext(spark, sf)
-    before = ctx.user_stats(12), ctx.discover()
+    before = ctx.user_stats(12), ctx.discover(), ctx.portfolio_history(12)
     _append_events(str(tmp_path / "events.parquet"), user_id=12, n=7)
-    after = ctx.user_stats(12), ctx.discover()
+    after = ctx.user_stats(12), ctx.discover(), ctx.portfolio_history(12)
     fresh = ServeContext(spark, sf)
-    assert after == (fresh.user_stats(12), fresh.discover())
+    assert after == (fresh.user_stats(12), fresh.discover(),
+                     fresh.portfolio_history(12))
     assert after[0]["n_events"] == before[0]["n_events"] + 7
     assert after[1] != before[1]
 

@@ -12,11 +12,14 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from neomarket_clickhouse_indexer_spark.operators.candles import finalize, ohlcv
+from neomarket_clickhouse_indexer_spark.operators.candles import (
+    finalize,
+    ohlcv,
+    rebucket,
+)
 from neomarket_clickhouse_indexer_spark.sources.tables import load_table
 from neomarket_clickhouse_indexer_spark.streaming.incremental import (
     incremental_candles_stream,
-    merge_candle_states,
     read_candle_state,
 )
 
@@ -73,10 +76,11 @@ def test_merge_is_idempotent_under_replay(spark, tmpdir):
     the sink overwrites affected partitions instead of appending."""
     ev = load_table(spark, SF_SMOKE, "events")
     partials = ohlcv(ev, key="event_type", ts="ts", price="value", ord_col="event_id")
-    once = merge_candle_states(partials.withColumn("bucket_date", F.to_date("bucket")))
+    # the fold merges partial states by re-bucketing at their own grain
+    once = rebucket(partials, 60)
     # partition-overwrite semantics: re-folding the same delta over the
     # already-merged state replaces those buckets with identical content
-    again = merge_candle_states(once)
+    again = rebucket(once, 60)
     assert _final(once).equals(_final(again))
 
 

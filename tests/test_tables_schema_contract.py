@@ -246,6 +246,25 @@ def test_memo_hit_repins_nanos_conf(spark, tmp_path):
         spark.conf.set(key, "true")
 
 
+def test_microsecond_source_leaves_nanos_conf_unset(spark, tmp_path):
+    """Only a source with a TIMESTAMP(NANOS) column needs ``nanosAsLong``:
+    loading a timestamp[us] source, on a memo miss and on a hit, writes no
+    session conf."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    sf = str(tmp_path)
+    _write_events(tmp_path / "events.parquet",
+                  pa.array(_INSTANTS_US, pa.timestamp("us")))
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        load_table(spark, sf, "events")
+        load_table(spark, sf, "events")
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)
+
+
 def test_memo_is_per_session(spark, tmp_path):
     """A ``newSession()`` sibling shares the application but has its own
     conf and temp views: it must resolve its own plan, not be handed the
