@@ -112,10 +112,28 @@ def build_wallet_snapshots(events: DataFrame, interval_s: int = 86400) -> DataFr
                   SNAPSHOT_SCHEMA)
 
 
-MARKS_SCHEMA = (
-    "wallet string, unrealized_pnl double, open_positions_cost double, "
-    "open_positions_value double"
-)
+MARK_FIELDS = ("unrealized_pnl double, open_positions_cost double, "
+               "open_positions_value double")
+MARKS_SCHEMA = f"wallet string, {MARK_FIELDS}"
+
+
+def _mark(entry_start: str | None, entry_end: str | None):
+    """The wallet's open-position mark record at the end of its replay,
+    optionally over lots entered inside [entry_start, entry_end] only."""
+    e_start = pd.Timestamp(entry_start) if entry_start is not None else None
+    e_end = pd.Timestamp(entry_end) if entry_end is not None else None
+
+    def mark(eng: LedgerEngine) -> dict:
+        unreal, cost, value = eng.open_positions_report(e_start, e_end)
+        return {"wallet": eng.wallet, "unrealized_pnl": unreal,
+                "open_positions_cost": cost, "open_positions_value": value}
+
+    return mark
+
+
+def _until(events: DataFrame, end: str) -> DataFrame:
+    """buildLedger(wallet, endTs) truncation: the events with ts <= end."""
+    return events.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
 
 
 def build_pnl_marks(
@@ -126,21 +144,30 @@ def build_pnl_marks(
 ) -> DataFrame:
     """Per-wallet open-position mark at ``end`` (reference calculatePnl's
     unrealized leg, ledger-engine.ts:2018-2031): replay each wallet's
-    events with ts <= end — buildLedger(wallet, endTs) truncation — then
-    price the open lots, optionally restricted to lots entered inside
-    [entry_start, entry_end] (PnL mode 3). One replay per wallet, same
-    repartition-by-wallet shape as the other builders."""
-    e_start = pd.Timestamp(entry_start) if entry_start is not None else None
-    e_end = pd.Timestamp(entry_end) if entry_end is not None else None
+    events with ts <= end, then price the open lots, optionally restricted
+    to lots entered inside [entry_start, entry_end] (PnL mode 3). One
+    replay per wallet, same repartition-by-wallet shape as the other
+    builders."""
+    mark = _mark(entry_start, entry_end)
+    return by_key(_until(events, end), "wallet", WALLET_ORDER,
+                  _per_wallet(lambda eng: [mark(eng)]), MARKS_SCHEMA)
 
-    def mark(eng: LedgerEngine) -> list[dict]:
-        unreal, cost, value = eng.open_positions_report(e_start, e_end)
-        return [{"wallet": eng.wallet, "unrealized_pnl": unreal,
-                 "open_positions_cost": cost, "open_positions_value": value}]
 
-    truncated = events.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
-    return by_key(truncated, "wallet", WALLET_ORDER, _per_wallet(mark),
-                  MARKS_SCHEMA)
+def build_realized_and_marks(
+    events: DataFrame,
+    end: str,
+    entry_start: str | None = None,
+    entry_end: str | None = None,
+) -> DataFrame:
+    """:func:`build_realized_events` and :func:`build_pnl_marks` from one
+    replay per wallet of its events with ts <= end: the wallet's realized
+    events (mark columns null), then its mark (a row with no timestamp).
+    A realized event carries its exit event's ts, so the realized events
+    before ``end`` are the same as a full replay's."""
+    mark = _mark(entry_start, entry_end)
+    return by_key(_until(events, end), "wallet", WALLET_ORDER,
+                  _per_wallet(lambda eng: [*eng.realized_events, mark(eng)]),
+                  f"{REALIZED_SCHEMA}, {MARK_FIELDS}")
 
 
 def build_realized_events(events: DataFrame) -> DataFrame:

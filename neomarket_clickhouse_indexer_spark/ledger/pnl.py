@@ -53,6 +53,70 @@ def _canonical_mode(mode) -> str:
     return mode
 
 
+MARK_COLUMNS = ("unrealized_pnl", "open_positions_cost", "open_positions_value")
+
+
+def _mode_filter(mode: str, start, end) -> Column:
+    """The realized events a mode counts: exit inside [start, end); modes
+    1/3 also need the entry inside, or no entry timestamp."""
+    in_period = (F.col("timestamp") >= F.lit(start)) & (F.col("timestamp") < F.lit(end))
+    if mode in ("period_only", "period_plus_unrealized"):
+        # null entry counts as in-period (realizedForMode,
+        # ledger-engine.ts:1986: `if (!event.entryTimestamp) return true`)
+        return in_period & (
+            F.col("entry_timestamp").isNull()
+            | (F.col("entry_timestamp") >= F.lit(start))
+        )
+    return in_period
+
+
+def _realized_sums(keep: Column | None = None) -> list[Column]:
+    """Per-wallet aggregates of realized events: the realized sum, the
+    event count and the per-type components, over the rows where ``keep``
+    holds (every row when None)."""
+    # per-type realized components (formatResult's report buckets,
+    # calculate-pnl.ts:36-42: sells / redemptions / merges / resolution
+    # losses / fee refunds). NOTE: realized_pnl sums ALL realized events;
+    # adapter-conversion realizations fall outside the five named buckets
+    # (as in the reference's switch default), so the components need not
+    # sum to the total when conversions realize.
+    et = F.col("event_type")
+    pnl = F.col("realized_pnl")
+
+    def comp(cnd: Column, name: str) -> Column:
+        if keep is not None:
+            cnd = keep & cnd
+        return dsum(F.when(cnd, pnl).otherwise(F.lit(0.0)), name)
+
+    if keep is None:
+        total, count = dsum(pnl, "realized_pnl"), F.count(F.lit(1))
+    else:
+        total = dsum(F.when(keep, pnl).otherwise(F.lit(0.0)), "realized_pnl")
+        count = F.count(F.when(keep, F.lit(1)))
+    return [
+        total,
+        count.alias("n_events"),
+        comp(et == "trade_sell", "realized_from_sells"),
+        comp(et.endswith("redemption"), "realized_from_redemptions"),
+        comp(et.endswith("merge"), "realized_from_merges"),
+        comp(et == "resolution", "realized_from_resolution_losses"),
+        comp(et.startswith("fee_"), "realized_from_fees"),
+    ]
+
+
+def _with_marks(out: DataFrame) -> DataFrame:
+    """Realized sums joined with marks: a missing value is 0, and
+    ``total_pnl`` = realized + unrealized."""
+    realized = [c for c in out.columns
+                if c not in ("wallet", "n_events", *MARK_COLUMNS)]
+    return out.select(
+        "wallet",
+        *[F.coalesce(c, F.lit(0.0)).alias(c) for c in realized],
+        F.coalesce("n_events", F.lit(0)).alias("n_events"),
+        *[F.coalesce(c, F.lit(0.0)).alias(c) for c in MARK_COLUMNS],
+    ).withColumn("total_pnl", F.col("realized_pnl") + F.col("unrealized_pnl"))
+
+
 def realized_pnl_by_mode(
     realized: DataFrame,
     start,
@@ -68,83 +132,37 @@ def realized_pnl_by_mode(
     ``unrealized_pnl`` / ``total_pnl`` columns alongside the realized sum.
     """
     mode = _canonical_mode(mode)
-    in_period = (F.col("timestamp") >= F.lit(start)) & (F.col("timestamp") < F.lit(end))
-    if mode in ("period_only", "period_plus_unrealized"):
-        # null entry counts as in-period (realizedForMode,
-        # ledger-engine.ts:1986: `if (!event.entryTimestamp) return true`)
-        cond: Column = in_period & (
-            F.col("entry_timestamp").isNull()
-            | (F.col("entry_timestamp") >= F.lit(start))
-        )
-    else:
-        cond = in_period
-    # per-type realized components (formatResult's report buckets,
-    # calculate-pnl.ts:36-42: sells / redemptions / merges / resolution
-    # losses / fee refunds). NOTE: realized_pnl sums ALL realized events;
-    # adapter-conversion realizations fall outside the five named buckets
-    # (as in the reference's switch default), so the components need not
-    # sum to the total when conversions realize.
-    et = F.col("event_type")
-
-    def comp(cnd: Column, name: str) -> Column:
-        return dsum(
-            F.when(cnd, F.col("realized_pnl")).otherwise(F.lit(0.0)), name
-        )
-
-    out = (
-        realized.filter(cond)
-        .groupBy("wallet")
-        .agg(
-            dsum(F.col("realized_pnl"), "realized_pnl"),
-            F.count(F.lit(1)).alias("n_events"),
-            comp(et == "trade_sell", "realized_from_sells"),
-            comp(et.endswith("redemption"), "realized_from_redemptions"),
-            comp(et.endswith("merge"), "realized_from_merges"),
-            comp(et == "resolution", "realized_from_resolution_losses"),
-            comp(et.startswith("fee_"), "realized_from_fees"),
-        )
-    )
+    out = (realized.filter(_mode_filter(mode, start, end))
+           .groupBy("wallet").agg(*_realized_sums()))
     if mode in ("period_plus_unrealized", "total"):
         if marks is None:
             raise ValueError(
                 f"mode {mode!r} needs the open-position marks DataFrame "
                 "(ledger.build.build_pnl_marks)"
             )
-        joined = out.join(marks, "wallet", "full")
-        fills = [
-            F.coalesce(c, F.lit(0.0)).alias(c)
-            for c in out.columns
-            if c not in ("wallet", "n_events")
-        ] + [F.coalesce("n_events", F.lit(0)).alias("n_events")] + [
-            F.coalesce(c, F.lit(0.0)).alias(c)
-            for c in (
-                "unrealized_pnl", "open_positions_cost",
-                "open_positions_value",
-            )
-        ]
-        out = joined.select("wallet", *fills).withColumn(
-            "total_pnl", F.col("realized_pnl") + F.col("unrealized_pnl")
-        )
+        out = _with_marks(out.join(marks, "wallet", "full"))
     return out
 
 
 def pnl_by_mode(events: DataFrame, start, end, mode=DEFAULT_MODE) -> DataFrame:
-    """End-to-end calculatePnl analog (ledger-engine.ts:1955-2055): build
-    realized events and, for modes 3-4, the open-lot marks, from the same
-    normalized event stream. Two replays (realized + mark) — each is one
-    wallet-partitioned pass; callers that already hold realized events can
-    use :func:`realized_pnl_by_mode` directly."""
-    from .build import build_pnl_marks, build_realized_events
+    """End-to-end calculatePnl analog (ledger-engine.ts:1955-2055): the
+    realized events and, for modes 3-4, the open-lot marks at ``end``, from
+    one wallet-partitioned replay of the normalized event stream. Callers
+    that already hold realized events can use :func:`realized_pnl_by_mode`
+    directly."""
+    from .build import build_realized_and_marks, build_realized_events
 
     mode = _canonical_mode(mode)
-    marks = None
-    if mode == "period_plus_unrealized":
-        marks = build_pnl_marks(events, end, entry_start=start, entry_end=end)
-    elif mode == "total":
-        marks = build_pnl_marks(events, end)
-    return realized_pnl_by_mode(
-        build_realized_events(events), start, end, mode, marks=marks
-    )
+    if mode in ("period_only", "with_history"):
+        return realized_pnl_by_mode(build_realized_events(events), start, end,
+                                    mode)
+    entry = (start, end) if mode == "period_plus_unrealized" else (None, None)
+    # every replayed wallet has a mark row, so the wallet set is the full
+    # join's; a mark row has no timestamp, so the mode filter skips it
+    rows = build_realized_and_marks(events, end, *entry)
+    return _with_marks(rows.groupBy("wallet").agg(
+        *_realized_sums(_mode_filter(mode, start, end)),
+        *[F.max(c).alias(c) for c in MARK_COLUMNS]))
 
 
 def rollup_realized_1d(ledger_entries: DataFrame) -> DataFrame:

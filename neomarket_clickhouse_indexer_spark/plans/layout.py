@@ -141,7 +141,7 @@ def normalized_table_layout(
     except OSError:
         pass
     shutil.rmtree(out_dir, ignore_errors=True)
-    df = load_table(spark, sf_dir, name)
+    df = load_table(spark, sf_dir, name, raw=True)
     try:
         import pyarrow.parquet as pq
 

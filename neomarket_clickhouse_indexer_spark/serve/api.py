@@ -12,12 +12,13 @@ method. The serving discipline carried over:
 - camelCase + unix-seconds response conventions (README.md:57-67).
 
 Dashboard reads are served from answer tables, as the reference serves
-them from pre-aggregated ClickHouse tables: ``user_stats``,
+them from pre-aggregated and pre-sorted ClickHouse tables: ``user_stats``,
 ``leaderboard(sort="volume")``, ``candles``, ``portfolio_history``,
-``market_stats`` and ``discover`` each read a driver-resident table that
-Spark computes once per context and per version of the events source (its
-``(mtime_ns, size)``), then answer by key lookup and slice — no Spark job
-per request.
+``market_stats``, ``discover``, ``activity`` and ``recent_trades`` each
+read a driver-resident table that Spark computes once per context and per
+version of the events source (its ``(mtime_ns, size)``), then answer by
+key lookup and slice — no Spark job per request. ``activity`` and
+``recent_trades`` share one table: each user's raw events, newest first.
 
 The per-wallet endpoints — ``ledger``, ``snapshots``, ``positions``,
 ``explain_user`` and ``pnl`` — recompute one wallet from raw events on
@@ -26,7 +27,6 @@ filtered on its key: one Spark job scans the events with ``user_id = u``
 pushed down to parquet and collects that wallet's rows, then the ledger
 engine (or the FIFO fold, for ``pnl``) replays them on the driver. No
 shuffle, no Python worker, and nothing kept between requests.
-``activity`` and ``recent_trades`` page one user's raw rows in one job;
 ``holders`` and ``leaderboard(sort="pnl")`` run the whole-table FIFO
 allocation per request.
 
@@ -267,19 +267,33 @@ class ServeContext:
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
         limit = max(1, min(limit, 200))
-        ev = (
-            tables.load_table(self.spark, self.sf_dir, "events")
-            .filter(F.col("user_id") == user_id)
-            .orderBy(F.desc("ts"), F.desc("event_id"))
-            .select(
-                "event_id",
-                F.unix_timestamp("ts").alias("time"),
-                "event_type",
-                "value",
-            )
-        )
-        page = ev.offset(offset) if offset else ev
-        return {"userId": user_id, "events": _rows(page, limit)}
+        rows = self._user_events().get(user_id, ())
+        return {"userId": user_id, "events": [
+            {"event_id": e, "time": t, "event_type": k, "value": v}
+            for e, t, k, v, _ in rows[offset:offset + limit]]}
+
+    def _user_events(self) -> dict[int, list[tuple]]:
+        """The answer table of ``activity`` and ``recent_trades``: user_id
+        → that user's raw events as ``(event_id, time, event_type, value,
+        ts_us)`` tuples in ``(ts desc, event_id desc)`` order, nulls last.
+        ``ts_us`` is the epoch micros of ``CAST(ts AS TIMESTAMP)``, the
+        type an NTZ ``ts`` is promoted to when compared with the
+        ``/trades`` cut-offs. One Spark job, no shuffle: collect the
+        projected rows, then sort on the driver."""
+        def build() -> dict[int, list[tuple]]:
+            df = tables.load_table(self.spark, self.sf_dir, "events").select(
+                "user_id", "event_id", F.unix_timestamp("ts").alias("time"),
+                "event_type", "value",
+                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
+            out: dict[int, list[tuple]] = {}
+            for r in df.collect():
+                out.setdefault(r[0], []).append(tuple(r[1:]))
+            for rows in out.values():
+                rows.sort(key=lambda r: (r[4] is None, -(r[4] or 0),
+                                         r[0] is None, -(r[0] or 0)))
+            return out
+
+        return self._table("user_events", None, build)
 
     # /portfolio/history (src/api.ts:993-1009): snapshot-FIRST — the
     # interval marks come from the O2 snapshot tier (wallet_pnl_snapshots
@@ -317,27 +331,34 @@ class ServeContext:
 
     # /trades recent window with adaptive widening (T6: retry with a 365d
     # window when the 30d window returns <10 rows, src/api.ts:1188-1192).
-    # One job: in (ts desc, event_id desc) order the 30d window's rows are
-    # a prefix of the 365d window's, so the 365d rows carry an in-30d flag.
+    # In (ts desc, event_id desc) order the 30d window's rows are a prefix
+    # of the 365d window's, so one walk of the user's rows answers both.
     def recent_trades(self, user_id: int, now=None, min_rows: int = 10) -> dict:
-        now = F.lit(now or domain.FIXED_NOW).cast("timestamp")
-
-        def since(days: int):
-            return F.col("ts") >= now - F.expr(f"INTERVAL {days} DAYS")
-
-        df = (
-            tables.load_table(self.spark, self.sf_dir, "events")
-            .filter((F.col("user_id") == user_id)
-                    & (F.col("event_type") == "purchase") & since(365))
-            .orderBy(F.desc("ts"), F.desc("event_id"))
-            .select("event_id", F.unix_timestamp("ts").alias("time"), "value",
-                    since(30).alias("in_30d"))
-        )
-        rows = _rows(df, 200)
-        recent = [r for r in rows if r.pop("in_30d")]
-        if len(recent) >= min_rows:
-            return {"userId": user_id, "trades": recent, "windowWidened": False}
+        cut30, cut365 = self._cutoffs(now or domain.FIXED_NOW)
+        rows, n30 = [], 0
+        for event_id, time, event_type, value, ts_us in \
+                self._user_events().get(user_id, ()):
+            if len(rows) == 200 or ts_us is None or cut365 is None \
+                    or ts_us < cut365:
+                break
+            if event_type == "purchase":
+                rows.append({"event_id": event_id, "time": time,
+                             "value": value})
+                if cut30 is not None and ts_us >= cut30:
+                    n30 += 1
+        if n30 >= min_rows:
+            return {"userId": user_id, "trades": rows[:n30],
+                    "windowWidened": False}
         return {"userId": user_id, "trades": rows, "windowWidened": True}
+
+    def _cutoffs(self, now) -> tuple[int | None, int | None]:
+        """Epoch micros of ``CAST(now AS TIMESTAMP) - INTERVAL d DAYS`` for
+        the 30- and 365-day ``/trades`` windows, as Spark resolves them
+        (once per ``now``)."""
+        return self._table("trades_cutoffs", now, lambda: tuple(self.spark.sql(
+            "SELECT unix_micros(CAST(:now AS TIMESTAMP) - INTERVAL 30 DAYS),"
+            " unix_micros(CAST(:now AS TIMESTAMP) - INTERVAL 365 DAYS)",
+            args={"now": now}).collect()[0]))
 
     # /pnl (src/api.ts: ledger-backed; modes in src/calculate-pnl.ts:4-10)
     def pnl(self, user_id: int, mode: str = "total",

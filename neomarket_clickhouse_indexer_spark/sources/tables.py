@@ -81,8 +81,11 @@ def source_token(path: str) -> tuple:
         return ("missing",)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str,
+               raw: bool = False) -> DataFrame:
     """Load one table; normalizes the events table's timestamp encoding.
+    ``raw=True`` reads the source file even while the normalized tier is
+    enabled (the tier build reads its input that way).
 
     A memo entry keeps the plan and whether its source needs
     ``_NANOS_CONF``. The events table's ``ts`` column has shipped in two
@@ -102,11 +105,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     maps — src/tables/index.ts:1-458; clickhouse/init/001_create_tables.sql:16
     keeps event timestamps DateTime64, encoding-stable).
     """
-    global _TIER_ENABLED
+    tier = _TIER_ENABLED and not raw
     ts_cols = _TS_COLUMNS.get(name, [])
     path = table_path(sf_dir, name)
-    key = (id(spark), os.path.realpath(path), source_token(path),
-           _TIER_ENABLED)
+    key = (id(spark), os.path.realpath(path), source_token(path), tier)
     hit = _TABLE_MEMO.get(key)
     if hit is not None:
         if hit[1]:
@@ -117,16 +119,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos = _has_nanos_column(path, ts_cols)
     if nanos:  # schema inference of TIMESTAMP(NANOS) fails without it
         spark.conf.set(_NANOS_CONF, "true")
-    if _TIER_ENABLED:
+    if tier:
         from ..plans.layout import normalized_table_layout
 
-        # the tier builder itself loads the raw table — suppress recursion
-        _TIER_ENABLED = False
-        try:
-            tier = normalized_table_layout(spark, sf_dir, name)
-        finally:
-            _TIER_ENABLED = True
-        df = spark.read.parquet(tier)
+        df = spark.read.parquet(normalized_table_layout(spark, sf_dir, name))
     else:
         df = spark.read.parquet(path)
         from pyspark.sql import functions as F

@@ -322,3 +322,31 @@ def test_normalized_tier_read_equals_raw(spark):
         enable_normalized_tier(False)
     assert tier_rows == raw_rows
     assert tier.rdd.getNumPartitions() >= 1
+
+
+def test_tier_build_reads_raw_without_flipping_the_flag(spark, tmp_path,
+                                                         monkeypatch):
+    """The tier build reads its input with ``raw=True``; the tier flag stays
+    set throughout, so a reader on another thread never sees it cleared."""
+    import shutil
+
+    from neomarket_clickhouse_indexer_spark.sources import tables
+
+    shutil.copy("/root/testdata/sf0.001/events.parquet",
+                tmp_path / "events.parquet")
+    seen = []
+    real = tables.load_table
+
+    def watched(*args, **kwargs):
+        seen.append((kwargs.get("raw", False), tables._TIER_ENABLED))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(tables, "load_table", watched)
+    tables.enable_normalized_tier(True)
+    try:
+        tier = tables.load_table(spark, str(tmp_path), "events")
+    finally:
+        tables.enable_normalized_tier(False)
+    assert seen == [(False, True), (True, True)]
+    raw = real(spark, str(tmp_path), "events")
+    assert sorted(tier.collect()) == sorted(raw.collect())
