@@ -84,32 +84,38 @@ def replay_wallet(wallet: str, g: pd.DataFrame,
     return eng
 
 
-def _per_wallet(emit, snapshot_interval_s: int | None = None):
-    """The per-partition body of every builder: replay each wallet of the
-    partition and concatenate the records ``emit(engine)`` returns for it
-    (dicts keyed by the builder's output columns)."""
+def _replay_by_wallet(events: DataFrame, emit, schema: str,
+                      snapshot_interval_s: int | None = None) -> DataFrame:
+    """The driver of every builder: replay each wallet of ``events`` and
+    concatenate the records ``emit(engine)`` returns for it (dicts keyed by
+    output columns). A record may leave columns out; every output frame
+    still carries all of ``schema``'s, null where no record has a value,
+    as mapInPandas matches the frame to the schema by column name."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
     def run(pdf: pd.DataFrame) -> pd.DataFrame | None:
         recs = [rec for wallet, g in pdf.groupby("wallet", sort=False)
                 for rec in emit(replay_wallet(wallet, g, snapshot_interval_s))]
-        return pd.DataFrame(recs) if recs else None
+        if not recs:
+            return None
+        out = pd.DataFrame(recs)
+        return out.assign(**{c: None for c in columns if c not in out})
 
-    return run
+    return by_key(events, "wallet", WALLET_ORDER, run, schema)
 
 
 def build_wallet_ledger(events: DataFrame) -> DataFrame:
     """Normalized events (ledger/prep.py schema) → wallet_ledger entries
     (reference table 001:292-313)."""
-    return by_key(events, "wallet", WALLET_ORDER,
-                  _per_wallet(attrgetter("entries")), LEDGER_SCHEMA)
+    return _replay_by_wallet(events, attrgetter("entries"), LEDGER_SCHEMA)
 
 
 def build_wallet_snapshots(events: DataFrame, interval_s: int = 86400) -> DataFrame:
     """Normalized events → periodic PnL snapshots (reference
     wallet_pnl_snapshots 001:318-332; snapshot emitter
     ledger-engine.ts:1116-1152)."""
-    return by_key(events, "wallet", WALLET_ORDER,
-                  _per_wallet(attrgetter("snapshots"), interval_s),
-                  SNAPSHOT_SCHEMA)
+    return _replay_by_wallet(events, attrgetter("snapshots"),
+                             SNAPSHOT_SCHEMA, interval_s)
 
 
 MARK_FIELDS = ("unrealized_pnl double, open_positions_cost double, "
@@ -149,8 +155,8 @@ def build_pnl_marks(
     replay per wallet, same repartition-by-wallet shape as the other
     builders."""
     mark = _mark(entry_start, entry_end)
-    return by_key(_until(events, end), "wallet", WALLET_ORDER,
-                  _per_wallet(lambda eng: [mark(eng)]), MARKS_SCHEMA)
+    return _replay_by_wallet(_until(events, end), lambda eng: [mark(eng)],
+                             MARKS_SCHEMA)
 
 
 def build_realized_and_marks(
@@ -165,13 +171,13 @@ def build_realized_and_marks(
     A realized event carries its exit event's ts, so the realized events
     before ``end`` are the same as a full replay's."""
     mark = _mark(entry_start, entry_end)
-    return by_key(_until(events, end), "wallet", WALLET_ORDER,
-                  _per_wallet(lambda eng: [*eng.realized_events, mark(eng)]),
-                  f"{REALIZED_SCHEMA}, {MARK_FIELDS}")
+    return _replay_by_wallet(_until(events, end),
+                             lambda eng: [*eng.realized_events, mark(eng)],
+                             f"{REALIZED_SCHEMA}, {MARK_FIELDS}")
 
 
 def build_realized_events(events: DataFrame) -> DataFrame:
     """Normalized events → per-slice realized PnL events (feeds the O3 PnL
     modes, ledger-engine.ts:1955-2055)."""
-    return by_key(events, "wallet", WALLET_ORDER,
-                  _per_wallet(attrgetter("realized_events")), REALIZED_SCHEMA)
+    return _replay_by_wallet(events, attrgetter("realized_events"),
+                             REALIZED_SCHEMA)

@@ -269,28 +269,28 @@ class ServeContext:
         limit = max(1, min(limit, 200))
         rows = self._user_events().get(user_id, ())
         return {"userId": user_id, "events": [
-            {"event_id": e, "time": t, "event_type": k, "value": v}
-            for e, t, k, v, _ in rows[offset:offset + limit]]}
+            {k: r[k] for k in ("event_id", "time", "event_type", "value")}
+            for r in rows[offset:offset + limit]]}
 
-    def _user_events(self) -> dict[int, list[tuple]]:
+    def _user_events(self) -> dict[int, list[dict[str, Any]]]:
         """The answer table of ``activity`` and ``recent_trades``: user_id
-        → that user's raw events as ``(event_id, time, event_type, value,
-        ts_us)`` tuples in ``(ts desc, event_id desc)`` order, nulls last.
-        ``ts_us`` is the epoch micros of ``CAST(ts AS TIMESTAMP)``, the
-        type an NTZ ``ts`` is promoted to when compared with the
+        → that user's raw events (``event_id``, ``time``, ``event_type``,
+        ``value``, ``ts_us``) in ``(ts desc, event_id desc)`` order, nulls
+        last. ``ts_us`` is the epoch micros of ``CAST(ts AS TIMESTAMP)``,
+        the type an NTZ ``ts`` is promoted to when compared with the
         ``/trades`` cut-offs. One Spark job, no shuffle: collect the
         projected rows, then sort on the driver."""
-        def build() -> dict[int, list[tuple]]:
-            df = tables.load_table(self.spark, self.sf_dir, "events").select(
+        def build() -> dict[int, list[dict[str, Any]]]:
+            events = tables.load_table(self.spark, self.sf_dir, "events")
+            out = _keyed(events.select(
                 "user_id", "event_id", F.unix_timestamp("ts").alias("time"),
                 "event_type", "value",
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
-            out: dict[int, list[tuple]] = {}
-            for r in df.collect():
-                out.setdefault(r[0], []).append(tuple(r[1:]))
+                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")),
+                "user_id")
             for rows in out.values():
-                rows.sort(key=lambda r: (r[4] is None, -(r[4] or 0),
-                                         r[0] is None, -(r[0] or 0)))
+                rows.sort(key=lambda r: (
+                    r["ts_us"] is None, -(r["ts_us"] or 0),
+                    r["event_id"] is None, -(r["event_id"] or 0)))
             return out
 
         return self._table("user_events", None, build)
@@ -336,14 +336,13 @@ class ServeContext:
     def recent_trades(self, user_id: int, now=None, min_rows: int = 10) -> dict:
         cut30, cut365 = self._cutoffs(now or domain.FIXED_NOW)
         rows, n30 = [], 0
-        for event_id, time, event_type, value, ts_us in \
-                self._user_events().get(user_id, ()):
+        for r in self._user_events().get(user_id, ()):
+            ts_us = r["ts_us"]
             if len(rows) == 200 or ts_us is None or cut365 is None \
                     or ts_us < cut365:
                 break
-            if event_type == "purchase":
-                rows.append({"event_id": event_id, "time": time,
-                             "value": value})
+            if r["event_type"] == "purchase":
+                rows.append({k: r[k] for k in ("event_id", "time", "value")})
                 if cut30 is not None and ts_us >= cut30:
                     n30 += 1
         if n30 >= min_rows:

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from neomarket_clickhouse_indexer_spark import domain
 from neomarket_clickhouse_indexer_spark.ledger.build import (
     build_pnl_marks,
@@ -82,3 +84,18 @@ def test_plan_holds_one_replay(events, mode):
     if mode in ("period_plus_unrealized", "total"):
         assert _map_in_pandas_nodes(_two_replay_pnl_by_mode(
             ev, PNL_PERIOD_START, PNL_PERIOD_END, mode)) == 2
+
+
+@pytest.mark.parametrize("sf_dir", sorted({sf for sf, _, _ in CASES}))
+def test_wallets_that_only_bought(events, sf_dir):
+    """Buys alone realize nothing, so every partition's records are mark
+    records only; the rows must still carry every column."""
+    buys = events[sf_dir].filter(F.col("is_buy"))
+    for mode in ("period_plus_unrealized", "total"):
+        got = pnl_by_mode(buys, PNL_PERIOD_START, PNL_PERIOD_END, mode)
+        want = _two_replay_pnl_by_mode(buys, PNL_PERIOD_START, PNL_PERIOD_END,
+                                       mode)
+        assert got.schema == want.schema, mode
+        rows = sorted(got.collect())
+        assert rows == sorted(want.collect()), mode
+        assert rows, mode
